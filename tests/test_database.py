@@ -462,15 +462,16 @@ def test_insert_records_reliable_matches_default(spark, tmp_path):
     assert out[False] == out[True]
 
 
-@pytest.mark.parametrize(
-    "kind,opts",
-    [
-        ("lsh", {}),
-        ("ivf", {"k_coarse": 4}),
-        ("pq", {"m": 4, "k": 8}),
-        ("ivfpq", {"k_coarse": 4, "m": 4, "k": 8, "nprobe": 4, "refine": 50}),
-    ],
-)
+# one small-index option set per family, shared by the per-family tests
+FAMILY_OPTS = [
+    ("lsh", {}),
+    ("ivf", {"k_coarse": 4}),
+    ("pq", {"m": 4, "k": 8}),
+    ("ivfpq", {"k_coarse": 4, "m": 4, "k": 8, "nprobe": 4, "refine": 50}),
+]
+
+
+@pytest.mark.parametrize("kind,opts", FAMILY_OPTS)
 def test_facade_index_family_roundtrip(spark, tmp_path, kind, opts):
     """VERDICT r7 #4: the facade fronts every index family — the kind
     is recorded in the metadata JSON, open() restores the persisted
@@ -923,26 +924,34 @@ def test_query_where_filters_neighbours(spark, tmp_path):
         assert len(res_all) == 8
 
 
-def test_query_where_allpass_matches_unfiltered(spark, tmp_path):
-    """Review r16 regression pin: an ALL-PASS `where` must return the
-    same ranked neighbours as no `where` at all.  The original bug was
-    probe-breadth divergence on IVF stores — the unfiltered path used
-    search_vectors' hardcoded nprobe=4 while the filtered path read
-    index_options (default 8), so on a store with >4 cells the two
-    calls could probe different cells.  Both paths now read the same
-    index_options source.  k_coarse=16 keeps the clamp from hiding a
-    relapse (nprobe 4 vs 8 is a real difference at 16 cells)."""
+@pytest.fixture(scope="module", params=FAMILY_OPTS, ids=[k for k, _ in FAMILY_OPTS])
+def family_store(request, spark, tmp_path_factory):
+    """One small store per index family, shared by the read-only
+    per-family tests below."""
     from zebra_spark.database import ZebraDatabase
 
+    kind, opts = request.param
     db = ZebraDatabase.create(
-        spark, str(tmp_path / "allpass_ivf"), dim=32, metric="l2sq",
-        index_kind="ivf", index_options={"k_coarse": 16},
+        spark, str(tmp_path_factory.mktemp(f"family_{kind}")), dim=32,
+        metric="l2sq", index_kind=kind, index_options=opts,
     )
     db.insert_texts(
         [f"wolf bear lynx {i} {'forest' if i % 2 else 'tundra'}"
          for i in range(24)]
         + [f"apple mango plum {i} orchard" for i in range(24)]
     )
+    return db
+
+
+def test_query_where_allpass_matches_unfiltered(family_store):
+    """Review r16 regression pin: an ALL-PASS `where` must return the
+    same ranked neighbours as no `where` at all, on every family.  The
+    original bug was probe-breadth divergence on IVF stores — the
+    unfiltered path used search_vectors' hardcoded nprobe=4 while the
+    filtered path read index_options (default 8).  Filtered and
+    unfiltered LSH/IVF searches run one path; the PQ family's
+    filter is a semi-join on the codes side of the same scan."""
+    db = family_store
     plain = (
         db.query_texts(["wolf bear lynx 1 forest"], k=5)
         .toPandas().sort_values("rank").reset_index(drop=True)
@@ -954,3 +963,23 @@ def test_query_where_allpass_matches_unfiltered(spark, tmp_path):
     assert plain[["vec_id", "rank", "dist"]].equals(
         allpass[["vec_id", "rank", "dist"]]
     )
+
+
+def test_query_vectors_validates_input(family_store):
+    """query_vectors is where outside vectors enter, so every family
+    and the exact path treat a bad batch alike: a dimension other than
+    the store's raises insert_records' ValueError (not dist=None rows on
+    the exact path, nor a numpy error that differs by family on the ANN
+    path), and a zero-query batch returns the empty result on every
+    family (not pq's `empty query batch`)."""
+    import numpy as np
+
+    db = family_store
+    cols = ["query_id", "vec_id", "rank", "dist", "doc"]
+    for exact in (True, False):
+        for bad in (np.ones((1, 8)), np.ones(8)):
+            with pytest.raises(ValueError, match="dimension != 32"):
+                db.query_vectors(bad, k=3, exact=exact)
+        assert db.query_vectors([], k=3, exact=exact).count() == 0
+    for res in (db.query_vectors(np.empty((0, 32))), db.query_texts([])):
+        assert res.columns == cols and res.count() == 0

@@ -611,3 +611,42 @@ def test_prefilter_checker_fails_on_postfilter_mutation(spark):
     with redirect_stdout(buf):
         post.explain("formatted")
     assert not _prefilter_shape_ok(buf.getvalue())
+
+
+def _broadcast_inputs(plan: str) -> list[str]:
+    """The `Input` line of every BroadcastExchange node in a formatted
+    plan's node details."""
+    out = []
+    for section in plan.split("\n\n"):
+        lines = section.strip().splitlines()
+        if lines and lines[0].split(" ", 1)[-1] == "BroadcastExchange":
+            out += [l for l in lines[1:] if l.startswith("Input")]
+    return out
+
+
+@pytest.mark.parametrize("kind,key", [("lsh", "tree_id"), ("ivf", "cell_id")])
+def test_facade_ann_search_broadcasts_driver_probe_keys(spark, tmp_path, kind, key):
+    """The facade's LSH/IVF search computes probe keys on the driver and
+    broadcasts them, with and without a `where` filter: one path, no
+    Python map node in the query plan (the ingest-with-reads benchmark
+    times this path on every read)."""
+    import numpy as np
+
+    from zebra_spark.database import ZebraDatabase
+
+    db = ZebraDatabase.create(
+        spark, str(tmp_path / kind), dim=16, index_kind=kind,
+        index_options={"k_coarse": 4} if kind == "ivf" else {},
+    )
+    db.insert_texts([f"doc {i} about topic {i % 3}" for i in range(24)])
+    db.save_index()  # checkpointed index: no build-time map in the plan
+    q = np.array([db.embeddings().first().embedding])
+    for where in (None, "vec_id >= 0"):
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            db.query_vectors(q, k=3, where=where).explain("formatted")
+        p = buf.getvalue()
+        assert "MapInPandas" not in p and "MapInArrow" not in p, (where, p)
+        assert any(
+            "query_id" in l and key in l for l in _broadcast_inputs(p)
+        ), (where, p)

@@ -21,11 +21,13 @@ import time
 
 
 def build_parser() -> argparse.ArgumentParser:
+    from zebra_spark.index import FAMILIES
+
     p = argparse.ArgumentParser(prog="zebra-spark")
     p.add_argument("--database-path", required=True)
     p.add_argument("--cpus", default=None)
     p.add_argument(
-        "--index", default="lsh", choices=("lsh", "ivf", "pq", "ivfpq"),
+        "--index", default="lsh", choices=tuple(FAMILIES),
         help="ANN index family recorded at database creation "
         "(ignored when opening an existing database, whose metadata "
         "already fixes the family)",

@@ -17,8 +17,9 @@ atomic-overwrite write mode plays its fsync/SyncAll durability stance.
 Scale posture: inserts are append-only parquet writes; ids are assigned
 with monotonically_increasing_id offset by a per-batch base (no global
 sort, no driver collect) — uniqueness without density, like UUIDv7
-(lsh.rs:415).  Delete/dedup are anti-join/window rewrites.  Search goes
-through the LSH index when built, exact brute force otherwise.
+(lsh.rs:415).  Delete/dedup are anti-join/window rewrites.  Search is
+exact brute force, or one call on the index family the metadata
+records (zebra_spark.index lists the families).
 """
 
 from __future__ import annotations
@@ -34,11 +35,11 @@ from pyspark.sql import functions as F
 
 from zebra_spark import functions as zf
 from zebra_spark.embed import DEFAULT_DIM, hash_tf_embedding
-from zebra_spark.functions import rnd
+from zebra_spark.functions import rank_top_k
+from zebra_spark.index import FAMILIES, check_metric, family, query_frame
 
 _BATCH_SHIFT = 40  # ids: (batch_no << 40) | monotonic_id
 _AUTO_COMPACT_APPENDS = 8  # compact the index every N incremental adds
-_INDEX_KINDS = ("lsh", "ivf", "pq", "ivfpq")
 
 
 class ZebraDatabase:
@@ -101,24 +102,16 @@ class ZebraDatabase:
         'pq', or 'ivfpq'; the kind is recorded in the metadata JSON
         (≙ .zebra, reference src/database/core.rs:183-190) so open()
         restores the right family.  index_options carries per-family
-        knobs (ivf: k_coarse/iters; pq: m/k/iters; ivfpq: all of those
-        plus nprobe/refine search defaults) and overrides the LSH
-        num_trees/max_node_size args."""
-        if index_kind not in _INDEX_KINDS:
+        knobs (each family's from_options/search read theirs) and
+        overrides the LSH num_trees/max_node_size args."""
+        if index_kind not in FAMILIES:
             raise ValueError(
-                f"index_kind {index_kind!r} not in {sorted(_INDEX_KINDS)}"
+                f"index_kind {index_kind!r} not in {sorted(FAMILIES)}"
             )
         # fail at CREATE time, not first search (ADVICE r8: the CLI
         # could mint e.g. an image database with --index pq whose
-        # cosine metric then made every non-exact query raise) — same
-        # message as the search-time guard in query_vectors
-        if index_kind in ("pq", "ivfpq") and metric != "l2sq":
-            raise ValueError(
-                f"index_kind {index_kind!r} serves l2sq databases only "
-                f"(metric is {metric!r}); create with index_kind "
-                "'lsh'/'ivf' instead — they serve every metric, and "
-                "exact search is always available regardless of kind"
-            )
+        # cosine metric then made every non-exact query raise)
+        check_metric(family(index_kind), metric)
         os.makedirs(path, exist_ok=True)
         opts = {
             "num_trees": num_trees,
@@ -292,6 +285,12 @@ class ZebraDatabase:
             [], "vec_id bigint, embedding array<double>"
         )
 
+    def _corpus(self) -> DataFrame:
+        """(vec_id, emb array<double>): the shape the kernels read."""
+        return self.embeddings().select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("emb")
+        )
+
     def count(self) -> int:
         return self.embeddings().count()
 
@@ -330,13 +329,16 @@ class ZebraDatabase:
             manifest_extra=manifest_extra,
         )
 
-    def _embed_frame(self, df: DataFrame, text_col: str) -> DataFrame:
+    def _embed_frame(
+        self, df: DataFrame, text_col: str, id_col: str = "_tmp_id"
+    ) -> DataFrame:
         """Embed `text_col` with the configured model: the native
-        hashing-TF path for 'hash_tf', else the model-backed pandas_udf
-        (embed_column — factory resolved at plan time, model loaded
-        lazily once per executor)."""
+        hashing-TF path for 'hash_tf' (which joins back on the unique
+        `id_col`), else the model-backed pandas_udf (embed_column —
+        factory resolved at plan time, model loaded lazily once per
+        executor)."""
         if self.meta["model"] == "hash_tf":
-            return hash_tf_embedding(df, text_col, "_tmp_id", self.meta["dim"])
+            return hash_tf_embedding(df, text_col, id_col, self.meta["dim"])
         from zebra_spark.embed import embed_column
 
         udf = embed_column(self.meta["model"])
@@ -650,32 +652,14 @@ class ZebraDatabase:
 
     # -- index / search (≙ query_documents/query_vectors, core.rs:267-313)
 
-    def _index_class(self):
-        kind = self.meta.get("index_kind", "lsh")
-        if kind == "ivf":
-            from zebra_spark.index.ivf import IVFIndex
-
-            return IVFIndex
-        if kind == "pq":
-            from zebra_spark.index.pq import PQIndex
-
-            return PQIndex
-        if kind == "ivfpq":
-            from zebra_spark.index.ivfpq import IVFPQIndex
-
-            return IVFPQIndex
-        from zebra_spark.index.lsh import LSHIndex
-
-        return LSHIndex
-
     def index(self, rebuild: bool = False):
         """Build, load, or return the database's ANN index — whichever
         family the metadata records (index_kind).  Every family shares
-        the same lifecycle: lazily built from the embeddings table,
+        the same lifecycle: lazily built from the embeddings table
+        (from_options reads the family's own index_options keys),
         persisted under {path}/index by save_index(), restored by
         load() when the persisted copy covers every batch."""
-        kind = self.meta.get("index_kind", "lsh")
-        cls_ = self._index_class()
+        cls_ = family(self.meta.get("index_kind", "lsh"))
         # fsutil, not os.path (review r17, completing the ADVICE r16
         # fix): save_index writes through fsutil, so a builtin probe
         # would answer "missing" on any non-local filesystem it
@@ -689,36 +673,9 @@ class ZebraDatabase:
         if self._index is None and not rebuild and persisted_fresh:
             self._index = cls_.load(self.spark, f"{self.path}/index")
         if self._index is None or rebuild:
-            opts = self.meta["index_options"]
-            seed = opts.get("seed", 42)
-            corpus = self.embeddings().select(
-                "vec_id", F.col("embedding").cast("array<double>").alias("emb")
+            self._index = cls_.from_options(
+                self.spark, self._corpus(), self.meta["index_options"]
             )
-            if kind == "lsh":
-                self._index = cls_.build(
-                    self.spark,
-                    sf_dir="",
-                    num_trees=opts["num_trees"],
-                    max_node_size=opts["max_node_size"],
-                    seed=seed,
-                    corpus=corpus,
-                )
-            elif kind == "ivf":
-                self._index = cls_.train(
-                    self.spark, "", k=opts.get("k_coarse", 16),
-                    iters=opts.get("iters", 5), seed=seed, corpus=corpus,
-                )
-            elif kind == "pq":
-                self._index = cls_.train(
-                    self.spark, "", m=opts.get("m", 8), k=opts.get("k", 16),
-                    iters=opts.get("iters", 10), seed=seed, corpus=corpus,
-                )
-            else:  # ivfpq
-                self._index = cls_.train(
-                    self.spark, "", k_coarse=opts.get("k_coarse", 16),
-                    m=opts.get("m", 8), k=opts.get("k", 16),
-                    iters=opts.get("iters", 5), seed=seed, corpus=corpus,
-                )
         return self._index
 
     def save_index(self) -> None:
@@ -738,29 +695,11 @@ class ZebraDatabase:
         (the reference computes then discards it, core.rs:304-305).
         `where` restricts admissible neighbours by a SQL predicate over
         the documents table (query_vectors docstring, r16)."""
-        if self.is_empty():  # ≙ empty-index short-circuit core.rs:272-274
-            return self.spark.createDataFrame(
-                [], "query_id bigint, vec_id bigint, rank int, dist double, doc string"
-            )
         qdf = self.spark.createDataFrame(
             [(i, t) for i, t in enumerate(texts)], "query_id bigint, doc string"
         )
-        if self.meta["model"] == "hash_tf":
-            emb = hash_tf_embedding(qdf, "doc", "query_id", self.meta["dim"])
-        else:
-            from zebra_spark.embed import embed_column
-
-            emb = qdf.withColumn(
-                "embedding",
-                embed_column(self.meta["model"])(F.col("doc")).cast(
-                    "array<double>"
-                ),
-            )
-        vecs = {r.query_id: r.embedding for r in emb.select("query_id", "embedding").collect()}
-        qids = sorted(vecs)
-        return self.query_vectors(
-            np.array([vecs[q] for q in qids], dtype=np.float64), k=k, exact=exact,
-            query_ids=qids, where=where,
+        return self._query_embedded(
+            self._embed_frame(qdf, "doc", "query_id"), "query_id", k, exact, where
         )
 
     def query_blobs(
@@ -779,8 +718,12 @@ class ZebraDatabase:
         feats = decode_and_embed(
             to_multimodal(raw, "id", "content", modality), dim=self.meta["dim"]
         )
-        rows = feats.select("id", "embedding").collect()
-        got = {r.id: [float(x) for x in r.embedding] for r in rows}
+        return self._query_embedded(feats, "id", k, exact, where)
+
+    def _query_embedded(self, emb: DataFrame, id_col: str, k, exact, where):
+        """Search with a small embedded query batch: its (id_col,
+        embedding) rows are collected, queries ordered by id."""
+        got = {r[id_col]: r.embedding for r in emb.select(id_col, "embedding").collect()}
         qids = sorted(got)
         return self.query_vectors(
             np.array([got[q] for q in qids], dtype=np.float64),
@@ -795,8 +738,14 @@ class ZebraDatabase:
         query_ids=None,
         where: str | None = None,
     ) -> DataFrame:
-        """ANN via the LSH index (exact=False) or brute force; always
-        exact re-rank; joins documents back (≙ read_documents, core.rs:358).
+        """ANN via the index family's search (exact=False) or brute
+        force; always exact re-rank; joins documents back (≙
+        read_documents, core.rs:358).
+
+        `vectors` is validated here, where outside input enters: a
+        single vector is one query, a zero-query batch returns the
+        empty result, and a dimension other than the database's is
+        refused like insert_records refuses it.
 
         where (r16, VERDICT r15 #4): an optional SQL predicate over the
         DOCUMENTS table (columns vec_id, doc, modality) restricting the
@@ -804,11 +753,20 @@ class ZebraDatabase:
         PRE-filter strategy throughout: the predicate lands on the
         documents scan, the surviving ids semi-join the search path
         (exact: before the distance math; every index family: before
-        candidate scoring via search_df's filter_ids), so a selective
+        candidate scoring, via its search's filter_ids), so a selective
         predicate can never empty the top-k the way post-filtering a
         result would.  The reference has no filter surface (its only
         predicate is the metric, lsh.rs:544-565) — extension surface."""
-        if self.is_empty():  # ≙ empty-index short-circuit core.rs:272-274
+        dim = self.meta["dim"]
+        vectors = np.asarray(vectors, dtype=np.float64)
+        if vectors.ndim < 2:  # a single vector; [] is zero queries
+            vectors = vectors.reshape(1, -1) if vectors.size else vectors.reshape(0, dim)
+        if vectors.ndim != 2 or vectors.shape[1] != dim:
+            raise ValueError(
+                f"{len(vectors)} query vector(s) have embedding dimension != {dim}"
+            )
+        # ≙ empty-index short-circuit core.rs:272-274
+        if not len(vectors) or self.is_empty():
             return self.spark.createDataFrame(
                 [], "query_id bigint, vec_id bigint, rank int, dist double,"
                 " doc string"
@@ -820,90 +778,17 @@ class ZebraDatabase:
         if exact:
             res = self._brute_force(vectors, k, query_ids, filter_ids)
         else:
-            res = self._index_search(
-                np.asarray(vectors, dtype=np.float64), k, query_ids,
-                filter_ids,
+            res = self.index().search(
+                vectors, k, self.meta["metric"], self.meta["index_options"],
+                query_ids, filter_ids,
             )
         docs = self.documents().select(
             F.col("vec_id"), F.col("doc")
         )
         return res.withColumnRenamed("neighbor_id", "vec_id").join(docs, "vec_id", "left")
 
-    def _index_search(self, vectors, k, query_ids=None, filter_ids=None):
-        """Dispatch an ANN vector search to whichever index family the
-        metadata records, normalizing to (query_id, neighbor_id, rank,
-        dist).  LSH and IVF serve the database's configured metric
-        directly; the PQ family's ADC kernel is L2-trained, so it backs
-        l2sq databases only (cosine/other metrics: use lsh/ivf or
-        exact=True).  filter_ids (r16) restricts admissible neighbours
-        via each family's search_df pre-filter; filtered LSH/IVF
-        searches route through search_df (the filter-aware path) while
-        unfiltered ones keep search_vectors' low-latency driver-side
-        probes."""
-        kind = self.meta.get("index_kind", "lsh")
-        idx = self.index()
-        opts = self.meta["index_options"]
-        if kind == "lsh" and filter_ids is None:
-            return idx.search_vectors(
-                vectors, k=k, metric=self.meta["metric"],
-                probes=opts.get("probes", 8), query_ids=query_ids,
-            )
-        if kind == "ivf" and filter_ids is None:
-            # same nprobe source as the filtered path below: a no-op
-            # filter must probe the same cells as no filter at all
-            # (review r16 — search_vectors' own default is 4 while the
-            # filtered path read index_options, so an all-pass `where`
-            # could return different neighbours than its absence)
-            return idx.search_vectors(
-                vectors, k=k, nprobe=opts.get("nprobe", 8),
-                metric=self.meta["metric"], query_ids=query_ids,
-            )
-        if kind in ("pq", "ivfpq") and self.meta["metric"] != "l2sq":
-            raise ValueError(
-                f"index_kind {kind!r} serves l2sq databases only "
-                f"(metric is {self.meta['metric']!r}); use "
-                "index_kind 'lsh'/'ivf' or exact=True"
-            )
-        if query_ids is None:
-            query_ids = list(range(len(vectors)))
-        qdf = self.spark.createDataFrame(
-            [
-                (int(q), [float(x) for x in v])
-                for q, v in zip(query_ids, vectors)
-            ],
-            "query_id bigint, qe array<double>",
-        )
-        if kind == "lsh":
-            return idx.search_df(
-                qdf, k=k, metric=self.meta["metric"],
-                probes=opts.get("probes", 8), filter_ids=filter_ids,
-            )
-        if kind == "ivf":
-            return idx.search_df(
-                qdf, k=k, nprobe=opts.get("nprobe", 8),
-                metric=self.meta["metric"], filter_ids=filter_ids,
-            )
-        if kind == "pq":
-            return idx.search_df(
-                qdf, k=k, refine=opts.get("refine", 100),
-                filter_ids=filter_ids,
-            )
-        return idx.search_df(
-            qdf, k=k, nprobe=opts.get("nprobe", 8),
-            refine=opts.get("refine", 100), filter_ids=filter_ids,
-        )
-
     def _brute_force(self, vectors, k, query_ids=None, filter_ids=None):
-        vectors = np.asarray(vectors, dtype=np.float64)
-        if query_ids is None:
-            query_ids = list(range(len(vectors)))
-        qdf = self.spark.createDataFrame(
-            [(int(q), [float(x) for x in v]) for q, v in zip(query_ids, vectors)],
-            "query_id bigint, qe array<double>",
-        )
-        corpus = self.embeddings().select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-        )
+        corpus = self._corpus()
         if filter_ids is not None:
             # admissibility BEFORE the distance math (query_vectors
             # docstring): the semi-join prunes the corpus scan
@@ -911,17 +796,14 @@ class ZebraDatabase:
                 filter_ids.select("vec_id"), "vec_id", "left_semi"
             )
         metric = zf.METRICS[self.meta["metric"]]
-        w = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
-        return (
-            corpus.crossJoin(F.broadcast(qdf))
+        return rank_top_k(
+            corpus.crossJoin(F.broadcast(query_frame(self.spark, vectors, query_ids)))
             .select(
                 "query_id",
                 F.col("vec_id").alias("neighbor_id"),
                 metric(F.col("qe"), F.col("emb")).alias("dist"),
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", rnd(F.col("dist")).alias("dist"))
+            ),
+            k,
         )
 
     # -- semi-supervised labels (r14, VERDICT r13 #1) ----------------------
@@ -1032,9 +914,7 @@ class ZebraDatabase:
         }
         if texts:
             qdf = self.spark.createDataFrame(texts, "sid bigint, doc string")
-            emb = self._embed_frame(
-                qdf.withColumnRenamed("sid", "_tmp_id"), "doc"
-            ).withColumnRenamed("_tmp_id", "sid")
+            emb = self._embed_frame(qdf, "doc", "sid")
             for r in emb.select("sid", "embedding").collect():
                 vecs[r.sid] = [float(x) for x in r.embedding]
         rows = [
@@ -1114,10 +994,7 @@ class ZebraDatabase:
         propagate_label_backlog(
             self.spark,
             self.path,
-            self.embeddings().select(
-                "vec_id",
-                F.col("embedding").cast("array<double>").alias("emb"),
-            ),
+            self._corpus(),
             weighted=weighted,
         )
         return self.labels()
@@ -1267,8 +1144,10 @@ class ZebraDatabase:
         or mutated, so a nightly audit can run beside a live tick."""
         gates: dict[str, bool | None] = {}
 
-        kind = self.meta.get("index_kind", "lsh")
-        if kind in ("pq", "ivfpq") and not self.is_empty():
+        retrainable = hasattr(
+            family(self.meta.get("index_kind", "lsh")), "needs_retrain"
+        )
+        if retrainable and not self.is_empty():
             gates["index_needs_retrain"] = self._retrain_gate(retrain_frac)
         else:
             gates["index_needs_retrain"] = None
@@ -1370,10 +1249,7 @@ class ZebraDatabase:
                     "first (batch insert), or init_cosine_state the "
                     "path with explicit seeds"
                 )
-            corpus = self.embeddings().select(
-                "vec_id",
-                F.col("embedding").cast("array<double>").alias("emb"),
-            )
+            corpus = self._corpus()
             # corpus-prefix seeds BY RANK, not by raw id (_cosine_seeds'
             # `vec_id < n_cells` rule assumes the fixtures' dense ids;
             # facade ids are batch-base offset, so the n_cells SMALLEST

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -38,6 +38,19 @@ def rnd(c: Column, nd: int = 4) -> Column:
     s = float(10 ** nd)
     r = F.floor(c.cast("double") * s + F.lit(0.5)) / s
     return F.when(r == 0.0, F.lit(0.0)).otherwise(r)
+
+
+def rank_top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of a scored (query_id, neighbor_id, dist) frame:
+    row_number over (dist, neighbor_id) — the id breaks distance ties —
+    kept while rank <= k, distances rounded by rnd.  Returns (query_id,
+    neighbor_id, rank, dist), the shape every kNN path emits."""
+    w = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", rnd(F.col("dist")).alias("dist"))
+    )
 
 
 def _as_col(c: Column | str) -> Column:

@@ -28,7 +28,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from zebra_spark import functions as zf
-from zebra_spark.functions import rnd
+from zebra_spark.functions import rank_top_k
+from zebra_spark.index import member_queries, query_frame
 from zebra_spark.io import embeddings_d
 
 
@@ -67,6 +68,26 @@ def probe_l2sq_scores(
     if cn2 is None:
         cn2 = (centroids ** 2).sum(axis=1)
     return cn2[None, :] - 2.0 * (M @ centroids.T)
+
+
+def _probe_cells(
+    M: np.ndarray, centroids: np.ndarray, metric: str, nprobe: int,
+    limit: int,
+) -> np.ndarray:
+    """(n_queries, nprobe) nearest cells per query row under the SEARCH
+    metric.  Training is L2 (standard IVF); for cosine search, probe by
+    cosine so high-magnitude vectors in distant L2 cells remain
+    reachable — for best recall, L2-normalize embeddings before
+    training when serving cosine."""
+    if metric == "cosine":
+        qn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
+        cn = centroids / np.maximum(
+            np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
+        )
+        d2 = 1.0 - qn @ cn.T
+    else:
+        d2 = probe_l2sq_scores(M, centroids, limit=limit)
+    return np.argsort(d2, axis=1)[:, :nprobe]
 
 
 def salt_buckets(
@@ -250,6 +271,14 @@ class IVFIndex:
         assignments = _assign(corpus, centroids, spread=True).localCheckpoint()
         return cls(spark, corpus, centroids, assignments)
 
+    @classmethod
+    def from_options(cls, spark: SparkSession, corpus: DataFrame, opts: dict):
+        """Train from the facade's index_options."""
+        return cls.train(
+            spark, "", k=opts.get("k_coarse", 16), iters=opts.get("iters", 5),
+            seed=opts.get("seed", 42), corpus=corpus,
+        )
+
     def add(self, new_corpus: DataFrame) -> int:
         """Incremental maintenance (≙ LSHIndex::add, reference
         lsh.rs:440-466, and the r7 PQ-family contract): assign a new
@@ -312,6 +341,17 @@ class IVFIndex:
             spark.read.parquet(f"{path}/cells"),
         )
 
+    def search(
+        self, vectors: np.ndarray, k: int, metric: str, opts: dict,
+        query_ids=None, filter_ids: DataFrame | None = None,
+    ) -> DataFrame:
+        """The facade's search (ZebraDatabase.query_vectors): probe
+        breadth from index_options' `nprobe` (default 8)."""
+        return self.search_vectors(
+            vectors, k=k, nprobe=opts.get("nprobe", 8), metric=metric,
+            query_ids=query_ids, filter_ids=filter_ids,
+        )
+
     def search_vectors(
         self,
         vectors: np.ndarray,
@@ -319,40 +359,35 @@ class IVFIndex:
         nprobe: int = 4,
         metric: str = "l2sq",
         query_ids: Sequence[int] | None = None,
+        filter_ids: DataFrame | None = None,
     ) -> DataFrame:
+        """Driver-side batch search: the nprobe nearest cells per query
+        (numpy on the small centroid set) broadcast as probe keys, then
+        an exact re-rank of the probed cells' members.  filter_ids: a
+        one-column (vec_id) frame of ADMISSIBLE neighbours, semi-joined
+        into the cell table before the key join (pre-filter, same
+        contract as search_df)."""
         vectors = np.asarray(vectors, dtype=np.float64)
         if query_ids is None:
             query_ids = list(range(len(vectors)))
-        # nprobe nearest cells per query, under the SEARCH metric (numpy
-        # on the small centroid set).  Training is L2 (standard IVF);
-        # for cosine search, probe by cosine so high-magnitude vectors in
-        # distant L2 cells remain reachable — for best recall, L2-normalize
-        # embeddings before training when serving cosine.
-        if metric == "cosine":
-            qn = vectors / np.maximum(
-                np.linalg.norm(vectors, axis=1, keepdims=True), 1e-12
-            )
-            cn = self.centroids / np.maximum(
-                np.linalg.norm(self.centroids, axis=1, keepdims=True), 1e-12
-            )
-            d2 = 1.0 - qn @ cn.T
-        else:
-            d2 = probe_l2sq_scores(vectors, self.centroids)
-        probe_cells = np.argsort(d2, axis=1)[:, :nprobe]
+        probe_cells = _probe_cells(
+            vectors, self.centroids, metric, nprobe, _PROBE_TENSOR_LIMIT
+        )
         keys = [
             (int(q), int(c))
             for q, cells in zip(query_ids, probe_cells)
             for c in cells
         ]
         keys_df = self.spark.createDataFrame(keys, "query_id bigint, cell_id int")
-        qdf = self.spark.createDataFrame(
-            [(int(q), [float(x) for x in v]) for q, v in zip(query_ids, vectors)],
-            "query_id bigint, qe array<double>",
-        )
+        qdf = query_frame(self.spark, vectors, query_ids)
         metric_fn = zf.METRICS[metric]
-        w = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
-        return (
-            self.assignments.join(F.broadcast(keys_df), "cell_id")
+        assignments = self.assignments
+        if filter_ids is not None:
+            assignments = assignments.join(
+                filter_ids.select("vec_id"), "vec_id", "left_semi"
+            )
+        return rank_top_k(
+            assignments.join(F.broadcast(keys_df), "cell_id")
             .select("query_id", "vec_id")
             .join(self.corpus, "vec_id")
             .join(F.broadcast(qdf), "query_id")
@@ -360,12 +395,8 @@ class IVFIndex:
                 "query_id",
                 F.col("vec_id").alias("neighbor_id"),
                 metric_fn(F.col("qe"), F.col("emb")).alias("dist"),
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id", "neighbor_id", "rank", rnd(F.col("dist")).alias("dist")
-            )
+            ),
+            k,
         )
 
     # seeds-per-salt-bucket cap for the search cell join — the same
@@ -437,19 +468,10 @@ class IVFIndex:
                 qes = pdf["qe"].tolist()
                 if not qes or nprobe == 0:
                     continue
-                M = np.asarray(qes, dtype=np.float64)
-                if metric == "cosine":
-                    qn = M / np.maximum(
-                        np.linalg.norm(M, axis=1, keepdims=True), 1e-12
-                    )
-                    cn = centroids / np.maximum(
-                        np.linalg.norm(centroids, axis=1, keepdims=True),
-                        1e-12,
-                    )
-                    d2 = 1.0 - qn @ cn.T
-                else:
-                    d2 = probe_l2sq_scores(M, centroids, limit=probe_limit)
-                cells = np.argsort(d2, axis=1)[:, :nprobe]
+                cells = _probe_cells(
+                    np.asarray(qes, dtype=np.float64), centroids, metric,
+                    nprobe, probe_limit,
+                )
                 row_idx, cell_ids, salts, _ = expand_probe_rows(
                     cells, buckets
                 )
@@ -473,19 +495,13 @@ class IVFIndex:
             )
         cell_corpus = salted_cell_side(corpus_side, buckets, "vec_id")
         metric_fn = zf.METRICS[metric]
-        w = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
-        return (
-            probed.join(cell_corpus, ["cell_id", "salt"])
-            .select(
+        return rank_top_k(
+            probed.join(cell_corpus, ["cell_id", "salt"]).select(
                 "query_id",
                 F.col("vec_id").alias("neighbor_id"),
                 metric_fn(F.col("qe"), F.col("emb")).alias("dist"),
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id", "neighbor_id", "rank", rnd(F.col("dist")).alias("dist")
-            )
+            ),
+            k,
         )
 
     def search_ids_df(
@@ -499,10 +515,10 @@ class IVFIndex:
         contract, completing the family symmetry): `ids_df` is one
         column `vec_id`; the query vectors come from a semi-join
         against the corpus and never transit the driver."""
-        q = self.corpus.join(
-            ids_df.select("vec_id"), "vec_id", "left_semi"
-        ).select(F.col("vec_id").alias("query_id"), F.col("emb").alias("qe"))
-        return self.search_df(q, k=k, nprobe=nprobe, metric=metric)
+        return self.search_df(
+            member_queries(self.corpus, ids_df), k=k, nprobe=nprobe,
+            metric=metric,
+        )
 
     def cell_sizes(self) -> DataFrame:
         return (

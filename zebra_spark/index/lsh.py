@@ -43,7 +43,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from zebra_spark import functions as zf
-from zebra_spark.functions import rnd
+from zebra_spark.functions import rank_top_k
+from zebra_spark.index import member_queries, query_frame
 from zebra_spark.io import embeddings_d
 
 
@@ -193,6 +194,7 @@ def _assign_op(normals: np.ndarray, constants: np.ndarray, split_meta: dict):
 
 
 _INDEX_SCHEMA = "tree_id int, bucket_id bigint, nbits int, vec_id bigint"
+_KEYS_SCHEMA = "query_id bigint, tree_id int, bucket_id bigint, nbits int"
 
 # id batches above this route from the collecting search_ids /
 # candidates_for_ids paths (driver fetches the batch's vectors, probe
@@ -243,6 +245,20 @@ def _probe_keys_np(
     )
 
 
+def _probe_op(normals, constants, split_meta, probes: int):
+    """mapInPandas op: (query_id, qe) -> deduped probe keys, computed
+    executor-side by the same numpy routine as the driver path."""
+
+    def op(batches):
+        for pdf in batches:
+            M = np.array(pdf["qe"].tolist(), dtype=np.float64)
+            keys = _probe_keys_np(M, normals, constants, split_meta, probes)
+            keys["query_id"] = keys["query_id"].map(
+                dict(enumerate(pdf["query_id"]))
+            )
+            yield keys.drop_duplicates()
+
+    return op
 
 
 class LSHIndex:
@@ -345,6 +361,18 @@ class LSHIndex:
         # cap deferrals — lsh_scale_check records them in SCALING.md
         idx.resplit_stats = resplit_stats
         return idx
+
+    @classmethod
+    def from_options(cls, spark: SparkSession, corpus: DataFrame, opts: dict):
+        """Build from the facade's index_options."""
+        return cls.build(
+            spark,
+            sf_dir="",
+            num_trees=opts["num_trees"],
+            max_node_size=opts["max_node_size"],
+            seed=opts.get("seed", 42),
+            corpus=corpus,
+        )
 
     @staticmethod
     def _local_resplit(
@@ -644,6 +672,17 @@ class LSHIndex:
 
     # -- search (≙ LSHIndex::search, lsh.rs:544-565) ----------------------
 
+    def search(
+        self, vectors: np.ndarray, k: int, metric: str, opts: dict,
+        query_ids=None, filter_ids: DataFrame | None = None,
+    ) -> DataFrame:
+        """The facade's search (ZebraDatabase.query_vectors): multi-probe
+        breadth from index_options' `probes` (default 8)."""
+        return self.search_vectors(
+            vectors, k=k, metric=metric, probes=opts.get("probes", 8),
+            query_ids=query_ids, filter_ids=filter_ids,
+        )
+
     def probe_keys(self, vectors: np.ndarray, probes: int = 1) -> pd.DataFrame:
         """(query_id, tree_id, bucket_id, nbits) probe set.  probes > 1
         enables multi-probe: flip the `probes-1` lowest-|margin| sign
@@ -655,6 +694,29 @@ class LSHIndex:
             self.normals, self.constants, self.split_meta, probes,
         )
 
+    def _driver_keys(self, vectors, probes: int, query_ids=None) -> DataFrame:
+        """Broadcast probe keys of a driver-side batch; query ids default
+        to the row positions."""
+        keys = self.probe_keys(vectors, probes)
+        if query_ids is not None:
+            keys["query_id"] = keys["query_id"].map(
+                {i: int(q) for i, q in enumerate(query_ids)}
+            )
+        return F.broadcast(
+            self.spark.createDataFrame(
+                [tuple(int(v) for v in row)
+                 for row in keys.drop_duplicates().itertuples(index=False)],
+                _KEYS_SCHEMA,
+            )
+        )
+
+    def _executor_keys(self, queries: DataFrame, probes: int) -> DataFrame:
+        """Probe keys of a (query_id, qe) frame, computed executor-side."""
+        return queries.mapInPandas(
+            _probe_op(self.normals, self.constants, self.split_meta, probes),
+            _KEYS_SCHEMA,
+        )
+
     def search_vectors(
         self,
         vectors: np.ndarray,
@@ -662,29 +724,30 @@ class LSHIndex:
         metric: str = "l2sq",
         probes: int = 8,
         query_ids: Sequence[int] | None = None,
+        filter_ids: DataFrame | None = None,
     ) -> DataFrame:
         """Two-phase ANN: partition-pruned candidate join, then exact
-        re-rank — the plan-shape twin of lsh.rs:552-564."""
+        re-rank — the plan-shape twin of lsh.rs:552-564.  Probe keys are
+        computed driver-side and broadcast.
+
+        filter_ids (r16, VERDICT r15 #4): a one-column (vec_id) frame
+        of ADMISSIBLE neighbours — the metadata-predicate + kNN query
+        shape.  The filter semi-joins the INDEX side before the bucket
+        join, so excluded rows never become candidates and never reach
+        the re-rank (pre-filter; equivalent to filtering candidates on
+        vec_id, cheaper by the excluded rows' join+distance work).
+        Recall is measured against the FILTERED exact oracle
+        (knn_filtered); a highly selective filter thins every bucket,
+        so callers should raise `probes` as selectivity drops — the
+        recall gate at sf0.1 lives in tests/test_ann_recall_sf01.py."""
         vectors = np.asarray(vectors, dtype=np.float64)
-        keys = self.probe_keys(vectors, probes)
-        if query_ids is not None:
-            remap = {i: int(q) for i, q in enumerate(query_ids)}
-            keys["query_id"] = keys["query_id"].map(remap)
-        else:
-            query_ids = list(range(len(vectors)))
-        keys_df = self.spark.createDataFrame(
-            [tuple(int(v) for v in row)
-             for row in keys.drop_duplicates().itertuples(index=False)],
-            "query_id bigint, tree_id int, bucket_id bigint, nbits int",
-        )
-        qdf = self.spark.createDataFrame(
-            # plain-Python floats: the non-Arrow createDataFrame path
-            # (caller-provided sessions) rejects numpy scalars
-            [(int(q), [float(x) for x in v]) for q, v in zip(query_ids, vectors)],
-            "query_id bigint, qe array<double>",
-        )
         return self._rerank(
-            self._candidates(F.broadcast(keys_df)), F.broadcast(qdf), k, metric
+            self._candidates(
+                self._driver_keys(vectors, probes, query_ids), filter_ids
+            ),
+            F.broadcast(query_frame(self.spark, vectors, query_ids)),
+            k,
+            metric,
         )
 
     def _candidates(
@@ -693,7 +756,7 @@ class LSHIndex:
         index_side = self.index_df
         if filter_ids is not None:
             # admissibility filter BEFORE the bucket join: excluded rows
-            # never become candidates (search_df docstring, r16)
+            # never become candidates (search_vectors docstring, r16)
             index_side = index_side.join(
                 filter_ids.select("vec_id"), "vec_id", "left_semi"
             )
@@ -705,20 +768,15 @@ class LSHIndex:
 
     def _rerank(self, candidates: DataFrame, qdf, k: int, metric: str) -> DataFrame:
         metric_fn = zf.METRICS[metric]
-        w = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
-        return (
+        return rank_top_k(
             candidates.join(self.corpus, "vec_id")
             .join(qdf, "query_id")
             .select(
                 "query_id",
                 F.col("vec_id").alias("neighbor_id"),
                 metric_fn(F.col("qe"), F.col("emb")).alias("dist"),
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id", "neighbor_id", "rank", rnd(F.col("dist")).alias("dist")
-            )
+            ),
+            k,
         )
 
     def search_df(
@@ -737,36 +795,12 @@ class LSHIndex:
         join shuffles on (tree_id, bucket_id, nbits); candidate re-rank
         shuffles on query_id: two bounded shuffles regardless of batch
         size.  search_vectors stays the low-latency path for driver-side
-        numpy batches (its probe keys broadcast).
-
-        filter_ids (r16, VERDICT r15 #4): a one-column (vec_id) frame
-        of ADMISSIBLE neighbours — the metadata-predicate + kNN query
-        shape.  The filter semi-joins the INDEX side before the bucket
-        join, so excluded rows never become candidates and never reach
-        the re-rank (pre-filter; equivalent to filtering candidates on
-        vec_id, cheaper by the excluded rows' join+distance work).
-        Recall is measured against the FILTERED exact oracle
-        (knn_filtered); a highly selective filter thins every bucket,
-        so callers should raise `probes` as selectivity drops — the
-        recall gate at sf0.1 lives in tests/test_ann_recall_sf01.py."""
-        normals, constants = self.normals, self.constants
-        split_meta = self.split_meta
-
-        def probe_op(batches):
-            for pdf in batches:
-                M = np.array(pdf["qe"].tolist(), dtype=np.float64)
-                keys = _probe_keys_np(M, normals, constants, split_meta, probes)
-                keys["query_id"] = keys["query_id"].map(
-                    dict(enumerate(pdf["query_id"]))
-                )
-                yield keys.drop_duplicates()
-
-        keys_df = queries.mapInPandas(
-            probe_op,
-            "query_id bigint, tree_id int, bucket_id bigint, nbits int",
-        )
+        numpy batches (its probe keys broadcast).  filter_ids: the
+        pre-filter of search_vectors."""
         return self._rerank(
-            self._candidates(keys_df, filter_ids=filter_ids),
+            self._candidates(
+                self._executor_keys(queries, probes), filter_ids=filter_ids
+            ),
             queries.select("query_id", "qe"),
             k,
             metric,
@@ -790,10 +824,20 @@ class LSHIndex:
         million corpus members against the forest shuffles instead of
         funneling vectors through the driver (VERDICT r6 #6).  Parity
         with search_ids is pinned by tests/test_lsh.py."""
-        q = self.corpus.join(
-            ids_df.select("vec_id"), "vec_id", "left_semi"
-        ).select(F.col("vec_id").alias("query_id"), F.col("emb").alias("qe"))
-        return self.search_df(q, k=k, metric=metric, probes=probes)
+        return self.search_df(
+            member_queries(self.corpus, ids_df), k=k, metric=metric,
+            probes=probes,
+        )
+
+    def _member_vectors(self, ids: list[int], ids_df: DataFrame):
+        """(present ids in input order, their vectors) — collected to
+        the driver, for the CLI-sized batches of the collecting paths."""
+        rows = (
+            self.corpus.join(F.broadcast(ids_df), "vec_id").select("vec_id", "emb").collect()
+        )
+        got = {r.vec_id: r.emb for r in rows}
+        present = [i for i in ids if i in got]
+        return present, np.array([got[i] for i in present], dtype=np.float64)
 
     def search_ids(
         self, ids: Iterable[int], k: int = 10, metric: str = "l2sq", probes: int = 8
@@ -813,12 +857,7 @@ class LSHIndex:
         ids_df = self.spark.createDataFrame([(i,) for i in ids], "vec_id bigint")
         if len(ids) > _IDS_COLLECT_LIMIT:
             return self.search_ids_df(ids_df, k=k, metric=metric, probes=probes)
-        rows = (
-            self.corpus.join(F.broadcast(ids_df), "vec_id").select("vec_id", "emb").collect()
-        )
-        got = {r.vec_id: r.emb for r in rows}
-        present = [i for i in ids if i in got]
-        vecs = np.array([got[i] for i in present], dtype=np.float64)
+        present, vecs = self._member_vectors(ids, ids_df)
         return self.search_vectors(vecs, k=k, metric=metric, probes=probes, query_ids=present)
 
     def candidates_for_ids(self, ids: Iterable[int], probes: int = 8) -> DataFrame:
@@ -832,22 +871,8 @@ class LSHIndex:
         ids_df = self.spark.createDataFrame([(i,) for i in ids], "vec_id bigint")
         if len(ids) > _IDS_COLLECT_LIMIT:
             return self.candidates_for_ids_df(ids_df, probes=probes)
-        rows = (
-            self.corpus.join(F.broadcast(ids_df), "vec_id").select("vec_id", "emb").collect()
-        )
-        got = {r.vec_id: r.emb for r in rows}
-        present = [i for i in ids if i in got]
-        vecs = np.array([got[i] for i in present], dtype=np.float64)
-        keys = self.probe_keys(vecs, probes)
-        keys["query_id"] = keys["query_id"].map(
-            {i: q for i, q in enumerate(present)}
-        )
-        keys_df = self.spark.createDataFrame(
-            [tuple(int(v) for v in row)
-             for row in keys.drop_duplicates().itertuples(index=False)],
-            "query_id bigint, tree_id int, bucket_id bigint, nbits int",
-        )
-        return self._candidates(F.broadcast(keys_df))
+        present, vecs = self._member_vectors(ids, ids_df)
+        return self._candidates(self._driver_keys(vecs, probes, present))
 
     def candidates_for_ids_df(
         self, ids_df: DataFrame, probes: int = 8
@@ -856,26 +881,9 @@ class LSHIndex:
         search_ids_df vs search_ids): the deduped (query_id, vec_id)
         candidate set, with probe keys computed executor-side — no
         id-batch-proportional driver transfer."""
-        q = self.corpus.join(
-            ids_df.select("vec_id"), "vec_id", "left_semi"
-        ).select(F.col("vec_id").alias("query_id"), F.col("emb").alias("qe"))
-        normals, constants = self.normals, self.constants
-        split_meta = self.split_meta
-
-        def probe_op(batches):
-            for pdf in batches:
-                M = np.array(pdf["qe"].tolist(), dtype=np.float64)
-                keys = _probe_keys_np(M, normals, constants, split_meta, probes)
-                keys["query_id"] = keys["query_id"].map(
-                    dict(enumerate(pdf["query_id"]))
-                )
-                yield keys.drop_duplicates()
-
-        keys_df = q.mapInPandas(
-            probe_op,
-            "query_id bigint, tree_id int, bucket_id bigint, nbits int",
+        return self._candidates(
+            self._executor_keys(member_queries(self.corpus, ids_df), probes)
         )
-        return self._candidates(keys_df)
 
     def compact(self) -> "LSHIndex":
         """Maintenance: re-cluster the index by tree after a run of

@@ -41,7 +41,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from zebra_spark import functions as zf
-from zebra_spark.functions import rnd
+from zebra_spark.functions import rank_top_k
+from zebra_spark.index import check_metric, query_frame
 from zebra_spark.io import embeddings_d
 
 
@@ -104,6 +105,49 @@ def _sample_mse(X: np.ndarray, codebooks: np.ndarray) -> float:
     return float(((X - Xh) ** 2).sum(axis=1).mean())
 
 
+def _residual_lut(r: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
+    """(m, k) partial squared distances from each sub-vector of one
+    (residual) vector to every entry of its sub-codebook."""
+    m, _, dsub = codebooks.shape
+    return np.stack(
+        [
+            ((r[s * dsub : (s + 1) * dsub][None, :] - codebooks[s]) ** 2).sum(axis=1)
+            for s in range(m)
+        ]
+    )
+
+
+def _refine_candidates(scored: DataFrame, refine: int) -> DataFrame:
+    """Per-query top-`refine` (query_id, vec_id) of ADC-scored (query_id,
+    vec_id, adist) rows, ties broken by id — the candidates the exact
+    re-rank reads full vectors for."""
+    wa = Window.partitionBy("query_id").orderBy("adist", "vec_id")
+    return (
+        scored.withColumn("crk", F.row_number().over(wa))
+        .filter(F.col("crk") <= refine)
+        .select("query_id", "vec_id")
+    )
+
+
+def _drift_row(spark, batch: DataFrame, op, label: str, train_mse) -> DataFrame:
+    """One (split, n, mse, ratio) row: `op` maps `batch`'s emb column to
+    per-Arrow-batch (n, sse) partial sums — only those reach the
+    driver — and ratio is the mean error over the frozen `train_mse`."""
+    row = (
+        batch.select("emb")
+        .mapInPandas(op, "n bigint, sse double")
+        .agg(F.sum("n").alias("n"), F.sum("sse").alias("sse"))
+        .collect()[0]
+    )
+    n = int(row.n or 0)
+    mse = float(row.sse) / n if n else 0.0
+    ratio = mse / train_mse if train_mse else float("nan")
+    return spark.createDataFrame(
+        [(label, n, mse, ratio)],
+        "split string, n bigint, mse double, ratio double",
+    )
+
+
 def retrain_due(n_added: int, n_trained: int, added_frac: float) -> bool:
     """THE retrain-volume trigger, one definition (ADVICE r16): the
     appended mass exceeds `added_frac` of the rows the codebooks were
@@ -124,6 +168,9 @@ class PQIndex:
     count toward a needs_retrain() trigger, and drift_audit() measures
     whether the frozen codebooks still fit new data (mean reconstruction
     error vs the frozen training-sample baseline)."""
+
+    # the ADC lookup tables hold partial squared L2 distances
+    metrics = ("l2sq",)
 
     def __init__(
         self,
@@ -191,6 +238,15 @@ class PQIndex:
             # the baseline is numpy over the already-collected sample
             n_trained=codes.count(),
             train_mse=_sample_mse(X, codebooks),
+        )
+
+    @classmethod
+    def from_options(cls, spark: SparkSession, corpus: DataFrame, opts: dict):
+        """Train from the facade's index_options."""
+        return cls.train(
+            spark, "", m=opts.get("m", 8), k=opts.get("k", 16),
+            iters=opts.get("iters", 10), seed=opts.get("seed", 42),
+            corpus=corpus,
         )
 
     @staticmethod
@@ -305,20 +361,7 @@ class PQIndex:
                     {"n": [len(X)], "sse": [float(((X - Xh) ** 2).sum())]}
                 )
 
-        row = (
-            batch.select("emb")
-            .mapInPandas(op, "n bigint, sse double")
-            .agg(F.sum("n").alias("n"), F.sum("sse").alias("sse"))
-            .collect()[0]
-        )
-        n = int(row.n or 0)
-        mse = float(row.sse) / n if n else 0.0
-        base = self.train_mse if self.train_mse else None
-        ratio = mse / base if base else float("nan")
-        return self.spark.createDataFrame(
-            [(label, n, mse, ratio)],
-            "split string, n bigint, mse double, ratio double",
-        )
+        return _drift_row(self.spark, batch, op, label, self.train_mse)
 
     def _write_meta(self, path: str) -> None:
         import json
@@ -369,20 +412,30 @@ class PQIndex:
         codebook centroids — the quantization used by tests to bound
         reconstruction error."""
         cb = self.codebooks
-        m, k, dsub = cb.shape
 
         def op(batches):
             for pdf in batches:
                 C = np.array(pdf["codes"].tolist(), dtype=np.int64)
-                parts = [cb[s][C[:, s]] for s in range(m)]
                 yield pd.DataFrame(
                     {
                         "vec_id": np.asarray(pdf["vec_id"], dtype=np.int64),
-                        "emb_hat": list(np.concatenate(parts, axis=1)),
+                        "emb_hat": list(_pq_decode_np(C, cb)),
                     }
                 )
 
         return self.codes.mapInPandas(op, "vec_id bigint, emb_hat array<double>")
+
+    def search(
+        self, vectors: np.ndarray, k: int, metric: str, opts: dict,
+        query_ids=None, filter_ids: DataFrame | None = None,
+    ) -> DataFrame:
+        """The facade's search (ZebraDatabase.query_vectors): ADC
+        candidates from index_options' `refine` (default 100)."""
+        check_metric(type(self), metric)
+        return self.search_df(
+            query_frame(self.spark, vectors, query_ids), k=k,
+            refine=opts.get("refine", 100), filter_ids=filter_ids,
+        )
 
     def search_df(
         self,
@@ -460,30 +513,16 @@ class PQIndex:
         scored = codes_side.mapInPandas(
             scan, "query_id bigint, vec_id bigint, adist double"
         )
-        wa = Window.partitionBy("query_id").orderBy("adist", "vec_id")
-        cand = (
-            scored.withColumn("crk", F.row_number().over(wa))
-            .filter(F.col("crk") <= refine)
-            .select("query_id", "vec_id")
-        )
-        qdf = self.spark.createDataFrame(
-            [(int(q), [float(x) for x in v]) for q, v in zip(qids, Q)],
-            "query_id bigint, qe array<double>",
-        )
-        w = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
-        return (
+        cand = _refine_candidates(scored, refine)
+        return rank_top_k(
             cand.join(self.corpus, "vec_id")
-            .join(F.broadcast(qdf), "query_id")
+            .join(F.broadcast(query_frame(self.spark, Q, qids)), "query_id")
             .select(
                 "query_id",
                 F.col("vec_id").alias("neighbor_id"),
                 zf.l2sq(F.col("qe"), F.col("emb")).alias("dist"),
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id", "neighbor_id", "rank", rnd(F.col("dist")).alias("dist")
-            )
+            ),
+            k,
         )
 
     def search_ids(

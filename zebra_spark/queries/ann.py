@@ -86,7 +86,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from zebra_spark import functions as zf
-from zebra_spark.functions import rnd
+from zebra_spark.functions import rank_top_k, rnd
 from zebra_spark.io import embeddings_d
 from zebra_spark.registry import sql_rnd
 
@@ -186,18 +186,15 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = qprobe.join(assign, "cell_id").select(
         "query_id", F.col("vec_id").alias("neighbor_id")
     )
-    wr = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
-    return (
+    return rank_top_k(
         cand.join(e.select(F.col("vec_id").alias("neighbor_id"), "emb"), "neighbor_id")
         .join(F.broadcast(q), "query_id")
         .select(
             "query_id",
             "neighbor_id",
             zf.l2sq(F.col("qe"), F.col("emb")).alias("dist"),
-        )
-        .withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= IVF_K)
-        .select("query_id", "neighbor_id", "rank", rnd(F.col("dist")).alias("dist"))
+        ),
+        IVF_K,
     )
 
 

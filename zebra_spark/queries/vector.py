@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from zebra_spark import functions as zf
-from zebra_spark.functions import rnd
+from zebra_spark.functions import rank_top_k, rnd
 from zebra_spark.io import embeddings_d, load, spread_scan
 from zebra_spark.registry import query, sql_rnd
 
@@ -199,17 +199,13 @@ def knn_exact(
     q = e.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("qe")
     )
-    w = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
-    return (
-        spread_scan(e, "vec_id").crossJoin(F.broadcast(q))
-        .select(
+    return rank_top_k(
+        spread_scan(e, "vec_id").crossJoin(F.broadcast(q)).select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             metric(F.col("qe"), F.col("emb")).alias("dist"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", rnd(F.col("dist")).alias("dist"))
+        ),
+        k,
     )
 
 
@@ -271,20 +267,15 @@ def knn_filtered(
     q = e.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("qe")
     )
-    w = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
-    return (
+    return rank_top_k(
         e.join(allowed, "vec_id", "left_semi")
         .crossJoin(F.broadcast(q))
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             metric(F.col("qe"), F.col("emb")).alias("dist"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", "rank", rnd(F.col("dist")).alias("dist")
-        )
+        ),
+        k,
     )
 
 
