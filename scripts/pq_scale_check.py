@@ -122,7 +122,7 @@ def main() -> None:
         # probe pruning on the saved layout: which cells would ONE query
         # read (the per-query scan bound — the number that holds at any
         # batch size), and what does the 20-query batch's union cover?
-        # (same nprobe-argmin as _search, driver-side)
+        # (same nprobe-argmin as search_df's probe step, driver-side)
         rows = (
             idx2.corpus.filter(F.col("vec_id") < N_Q)
             .select("vec_id", "emb")

@@ -50,7 +50,7 @@ def test_ivf_recall_sf01(spark, exact_pairs):
 
     idx = IVFIndex.train(spark, SF01, k=16, iters=5, seed=42)
     ids = spark.range(N_QUERIES).select(F.col("id").alias("vec_id"))
-    r = _recall(idx.search_ids_df(ids, k=10, nprobe=12), exact_pairs)
+    r = _recall(idx.search_ids(ids, k=10, nprobe=12), exact_pairs)
     assert r >= 0.9, f"IVF recall@10 {r} < 0.9 at sf0.1"
 
 

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import pytest
 
+from zebra_spark.index import FAMILIES
+
 
 @pytest.fixture()
 def db(spark, tmp_path):
@@ -970,8 +972,9 @@ def test_query_vectors_validates_input(family_store):
     and the exact path treat a bad batch alike: a dimension other than
     the store's raises insert_records' ValueError (not dist=None rows on
     the exact path, nor a numpy error that differs by family on the ANN
-    path), and a zero-query batch returns the empty result on every
-    family (not pq's `empty query batch`)."""
+    path), a zero-query batch returns the empty result on every family
+    (not pq's `empty query batch`), and query_ids that do not name
+    each query exactly once raise ValueError."""
     import numpy as np
 
     db = family_store
@@ -983,3 +986,87 @@ def test_query_vectors_validates_input(family_store):
         assert db.query_vectors([], k=3, exact=exact).count() == 0
     for res in (db.query_vectors(np.empty((0, 32))), db.query_texts([])):
         assert res.columns == cols and res.count() == 0
+    # query_ids are outside input too: one id per query, none repeated
+    batch = np.ones((3, 32))
+    for exact in (True, False):
+        for ids in ([7], [7, 8, 9, 10], [7, 7, 8]):
+            with pytest.raises(ValueError, match="query_ids"):
+                db.query_vectors(batch, k=5, exact=exact, query_ids=ids)
+
+
+def test_search_surface_parity(family_store, monkeypatch):
+    """One search surface per family: a driver batch (search_vectors),
+    the same batch as a frame (search_df) and the same vectors named by
+    id (search_ids) return the same ranked rows.  search_ids keeps the
+    vectors on executors — no driver collect — on every family but pq,
+    whose scan closure holds the batch's lookup tables; so does LSH's
+    candidates_for_ids."""
+    import numpy as np
+    from pyspark.sql import DataFrame
+
+    from zebra_spark.index import query_frame, search_knobs
+
+    db = family_store
+    idx = db.index()
+    knobs = search_knobs(type(idx), db.meta["index_options"])
+    rows = idx.corpus.orderBy("vec_id").limit(4).collect()
+    ids = [r.vec_id for r in rows]
+    V = np.array([r.emb for r in rows])
+
+    def ranked(df):
+        return (
+            df.toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
+        )
+
+    via_vectors = ranked(idx.search_vectors(V, 5, query_ids=ids, **knobs))
+    via_df = ranked(idx.search_df(query_frame(idx.spark, V, ids), 5, **knobs))
+    assert len(via_vectors) == 5 * len(ids)
+    assert via_df.equals(via_vectors)
+
+    kind = db.meta["index_kind"]
+    if kind != "pq":
+        def no_collect(self):
+            raise AssertionError("search_ids must not collect on the driver")
+
+        monkeypatch.setattr(DataFrame, "collect", no_collect)
+    via_ids = idx.search_ids(ids, 5, **knobs)
+    cands = idx.candidates_for_ids(ids) if kind == "lsh" else None
+    monkeypatch.undo()
+    assert ranked(via_ids).equals(via_vectors)
+    if cands is not None:
+        assert set(map(tuple, cands.toPandas()[["query_id", "vec_id"]].values)) >= set(
+            map(tuple, via_vectors[["query_id", "neighbor_id"]].values)
+        )
+
+
+@pytest.mark.parametrize("kind", sorted(FAMILIES))
+def test_family_search_surface(kind):
+    """Every family exposes exactly search_vectors, search_df and
+    search_ids, led by (k=10, metric="l2sq") after the query argument,
+    and its search knobs are keyword-only with one default, the same in
+    search_vectors and search_df.  Imports only — no Spark session."""
+    import inspect
+
+    from zebra_spark.index import family
+
+    cls = family(kind)
+    assert {n for n in dir(cls) if n.startswith("search")} == {
+        "search_vectors", "search_df", "search_ids",
+    }
+    sigs = {
+        n: list(inspect.signature(getattr(cls, n)).parameters.values())
+        for n in ("search_vectors", "search_df", "search_ids")
+    }
+    for n, params in sigs.items():
+        assert [(p.name, p.default) for p in params[2:4]] == [
+            ("k", 10), ("metric", "l2sq"),
+        ], n
+
+    def knobs(params):
+        return [(p.name, p.default) for p in params
+                if p.kind is p.KEYWORD_ONLY]
+
+    assert knobs(sigs["search_vectors"]) == knobs(sigs["search_df"])
+    assert knobs(sigs["search_vectors"])
+    for n in ("search_vectors", "search_df"):
+        assert "filter_ids" in [p.name for p in sigs[n]], n

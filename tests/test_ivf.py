@@ -168,37 +168,6 @@ def test_ivf_add_and_remove(spark):
     assert idx.assignments.filter(F.col("vec_id").isin(10, 20)).count() == 0
 
 
-def test_search_ids_df_matches_driver_path(spark, clustered):
-    """The distributed id-batch path (r8, completing the LSH/IVF-PQ
-    contract) returns the same ranked neighbors as the driver-probed
-    search_vectors for the same query vectors."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from zebra_spark.index.ivf import IVFIndex
-
-    corpus, _ = clustered
-    idx = IVFIndex.train(spark, "", k=8, iters=3, seed=5, corpus=corpus)
-    ids = list(range(8))
-    rows = (
-        idx.corpus.filter(F.col("vec_id").isin(ids))
-        .orderBy("vec_id").collect()
-    )
-    via_drv = (
-        idx.search_vectors(
-            np.array([r.emb for r in rows]), k=5, nprobe=4,
-            query_ids=[r.vec_id for r in rows],
-        )
-        .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-    )
-    ids_df = spark.createDataFrame([(i,) for i in ids], "vec_id bigint")
-    via_df = (
-        idx.search_ids_df(ids_df, k=5, nprobe=4)
-        .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-    )
-    assert via_df.equals(via_drv)
-
-
 def test_search_df_nprobe_clamped(spark, clustered):
     """nprobe > k_cells must behave as nprobe == k_cells (the IVFPQ
     ADVICE r7 clamp, mirrored on the IVF twin)."""
@@ -206,13 +175,13 @@ def test_search_df_nprobe_clamped(spark, clustered):
 
     corpus, _ = clustered
     idx = IVFIndex.train(spark, "", k=8, iters=3, seed=5, corpus=corpus)
-    ids_df = spark.createDataFrame([(i,) for i in range(4)], "vec_id bigint")
+    ids = list(range(4))
     over = (
-        idx.search_ids_df(ids_df, k=5, nprobe=999)
+        idx.search_ids(ids, k=5, nprobe=999)
         .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
     )
     full = (
-        idx.search_ids_df(ids_df, k=5, nprobe=len(idx.centroids))
+        idx.search_ids(ids, k=5, nprobe=len(idx.centroids))
         .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
     )
     assert over.equals(full)

@@ -287,88 +287,37 @@ def test_database_auto_compacts_index(spark, tmp_path, monkeypatch):
     assert hits[0].dist == 0.0
 
 
-def test_search_ids_df_matches_search_ids(spark, index):
-    """The distributed id-batch path (no driver vector transfer) must
-    return exactly what the driver-side search_ids path returns."""
-    ids = list(range(0, 120))
-    ids_df = spark.createDataFrame([(i,) for i in ids], "vec_id bigint")
-    via_df = (
-        index.search_ids_df(ids_df, k=10, probes=8)
-        .toPandas()
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
-    via_drv = (
-        index.search_ids(ids, k=10, probes=8)
-        .toPandas()
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
-    assert via_df.equals(via_drv)
-    # and the plan is driver-transfer-free: the probe stage is a python
-    # map over the corpus join, not a broadcast of collected keys
-    plan = index.search_ids_df(ids_df)._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
+def test_candidates_for_ids_matches_driver_probe_keys(spark, index):
+    """candidates_for_ids (probe keys computed executor-side) takes a
+    list or a vec_id frame alike, and its candidate set is the index
+    rows under the driver-side probe_keys of the same vectors."""
+    import pandas as pd
 
-
-def test_candidates_for_ids_df_matches_driver_path(spark, index):
     ids = list(range(0, 60))
     ids_df = spark.createDataFrame([(i,) for i in ids], "vec_id bigint")
+    cols = ["query_id", "vec_id"]
     got = (
-        index.candidates_for_ids_df(ids_df)
-        .toPandas().sort_values(["query_id", "vec_id"]).reset_index(drop=True)
+        index.candidates_for_ids(ids_df)
+        .toPandas().sort_values(cols).reset_index(drop=True)
     )
-    want = (
+    via_list = (
         index.candidates_for_ids(ids)
-        .toPandas().sort_values(["query_id", "vec_id"]).reset_index(drop=True)
+        .toPandas().sort_values(cols).reset_index(drop=True)
     )
-    assert got.equals(want)
+    assert got.equals(via_list)
 
-
-def test_large_id_batch_routes_off_the_driver(spark, index, monkeypatch):
-    """r14 (VERDICT r13 #4): id batches above _IDS_COLLECT_LIMIT must
-    delegate to the distributed _df paths — proven by making every
-    driver collect raise for the duration of the guarded call (the
-    collecting path's first step is a corpus-join collect, so it
-    cannot pass this spy), then checking the results equal the
-    collecting path's."""
-    from pyspark.sql import DataFrame
-
-    from zebra_spark.index import lsh as lshmod
-
-    ids = list(range(0, 40))
+    vecs = {
+        r.vec_id: r.emb
+        for r in index.corpus.filter(spark_col("vec_id").isin(ids)).collect()
+    }
+    keys = index.probe_keys(np.array([vecs[i] for i in ids]), probes=8)
+    keys["query_id"] = keys["query_id"].map(dict(enumerate(ids)))
     want = (
-        index.search_ids(ids, k=5, probes=8)  # collecting path (40 <= 4096)
-        .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
+        pd.merge(keys, index.index_df.toPandas(),
+                 on=["tree_id", "bucket_id", "nbits"])[cols]
+        .drop_duplicates().sort_values(cols).reset_index(drop=True)
     )
-    want_cand = (
-        index.candidates_for_ids(ids)
-        .toPandas().sort_values(["query_id", "vec_id"]).reset_index(drop=True)
-    )
-
-    monkeypatch.setattr(lshmod, "_IDS_COLLECT_LIMIT", 10)
-    real_collect = DataFrame.collect
-
-    def no_collect(self):
-        raise AssertionError("guarded path must not collect on the driver")
-
-    monkeypatch.setattr(DataFrame, "collect", no_collect)
-    try:
-        routed = index.search_ids(ids, k=5, probes=8)
-        routed_cand = index.candidates_for_ids(ids)
-    finally:
-        monkeypatch.setattr(DataFrame, "collect", real_collect)
-
-    got = (
-        routed.toPandas()
-        .sort_values(["query_id", "rank"]).reset_index(drop=True)
-    )
-    got_cand = (
-        routed_cand.toPandas()
-        .sort_values(["query_id", "vec_id"]).reset_index(drop=True)
-    )
-    assert got.equals(want)
-    assert got_cand.equals(want_cand)
+    assert got.astype("int64").equals(want.astype("int64"))
 
 
 def test_search_df_filtered(spark, index):

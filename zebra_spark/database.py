@@ -36,7 +36,9 @@ from pyspark.sql import functions as F
 from zebra_spark import functions as zf
 from zebra_spark.embed import DEFAULT_DIM, hash_tf_embedding
 from zebra_spark.functions import rank_top_k
-from zebra_spark.index import FAMILIES, check_metric, family, query_frame
+from zebra_spark.index import (
+    FAMILIES, check_metric, family, query_frame, search_knobs,
+)
 
 _BATCH_SHIFT = 40  # ids: (batch_no << 40) | monotonic_id
 _AUTO_COMPACT_APPENDS = 8  # compact the index every N incremental adds
@@ -102,8 +104,9 @@ class ZebraDatabase:
         'pq', or 'ivfpq'; the kind is recorded in the metadata JSON
         (≙ .zebra, reference src/database/core.rs:183-190) so open()
         restores the right family.  index_options carries per-family
-        knobs (each family's from_options/search read theirs) and
-        overrides the LSH num_trees/max_node_size args."""
+        knobs (from_options reads the build keys; the search knobs go
+        to search_vectors) and overrides the LSH num_trees/max_node_size
+        args."""
         if index_kind not in FAMILIES:
             raise ValueError(
                 f"index_kind {index_kind!r} not in {sorted(FAMILIES)}"
@@ -738,14 +741,15 @@ class ZebraDatabase:
         query_ids=None,
         where: str | None = None,
     ) -> DataFrame:
-        """ANN via the index family's search (exact=False) or brute
-        force; always exact re-rank; joins documents back (≙
+        """ANN via the index family's search_vectors (exact=False) or
+        brute force; always exact re-rank; joins documents back (≙
         read_documents, core.rs:358).
 
         `vectors` is validated here, where outside input enters: a
         single vector is one query, a zero-query batch returns the
-        empty result, and a dimension other than the database's is
-        refused like insert_records refuses it.
+        empty result, a dimension other than the database's is refused
+        like insert_records refuses it, and `query_ids` must name each
+        query once — all before any Spark job runs.
 
         where (r16, VERDICT r15 #4): an optional SQL predicate over the
         DOCUMENTS table (columns vec_id, doc, modality) restricting the
@@ -753,7 +757,7 @@ class ZebraDatabase:
         PRE-filter strategy throughout: the predicate lands on the
         documents scan, the surviving ids semi-join the search path
         (exact: before the distance math; every index family: before
-        candidate scoring, via its search's filter_ids), so a selective
+        candidate scoring, via search_vectors' filter_ids), so a selective
         predicate can never empty the top-k the way post-filtering a
         result would.  The reference has no filter surface (its only
         predicate is the metric, lsh.rs:544-565) — extension surface."""
@@ -765,6 +769,14 @@ class ZebraDatabase:
             raise ValueError(
                 f"{len(vectors)} query vector(s) have embedding dimension != {dim}"
             )
+        if query_ids is not None:
+            query_ids = [int(q) for q in query_ids]
+            if len(query_ids) != len(vectors):
+                raise ValueError(
+                    f"{len(query_ids)} query_ids for {len(vectors)} query vectors"
+                )
+            if len(set(query_ids)) != len(query_ids):
+                raise ValueError("query_ids repeat an id")
         # ≙ empty-index short-circuit core.rs:272-274
         if not len(vectors) or self.is_empty():
             return self.spark.createDataFrame(
@@ -778,9 +790,11 @@ class ZebraDatabase:
         if exact:
             res = self._brute_force(vectors, k, query_ids, filter_ids)
         else:
-            res = self.index().search(
-                vectors, k, self.meta["metric"], self.meta["index_options"],
-                query_ids, filter_ids,
+            index = self.index()
+            res = index.search_vectors(
+                vectors, k, self.meta["metric"], query_ids=query_ids,
+                filter_ids=filter_ids,
+                **search_knobs(type(index), self.meta["index_options"]),
             )
         docs = self.documents().select(
             F.col("vec_id"), F.col("doc")

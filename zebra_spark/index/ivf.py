@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from zebra_spark import functions as zf
 from zebra_spark.functions import rank_top_k
-from zebra_spark.index import member_queries, query_frame
+from zebra_spark.index import SearchIds, query_frame
 from zebra_spark.io import embeddings_d
 
 
@@ -173,7 +173,7 @@ def _assign(corpus: DataFrame, centroids: np.ndarray,
     )
 
 
-class IVFIndex:
+class IVFIndex(SearchIds):
     def __init__(
         self,
         spark: SparkSession,
@@ -341,25 +341,15 @@ class IVFIndex:
             spark.read.parquet(f"{path}/cells"),
         )
 
-    def search(
-        self, vectors: np.ndarray, k: int, metric: str, opts: dict,
-        query_ids=None, filter_ids: DataFrame | None = None,
-    ) -> DataFrame:
-        """The facade's search (ZebraDatabase.query_vectors): probe
-        breadth from index_options' `nprobe` (default 8)."""
-        return self.search_vectors(
-            vectors, k=k, nprobe=opts.get("nprobe", 8), metric=metric,
-            query_ids=query_ids, filter_ids=filter_ids,
-        )
-
     def search_vectors(
         self,
         vectors: np.ndarray,
         k: int = 10,
-        nprobe: int = 4,
         metric: str = "l2sq",
         query_ids: Sequence[int] | None = None,
         filter_ids: DataFrame | None = None,
+        *,
+        nprobe: int = 8,
     ) -> DataFrame:
         """Driver-side batch search: the nprobe nearest cells per query
         (numpy on the small centroid set) broadcast as probe keys, then
@@ -407,9 +397,10 @@ class IVFIndex:
         self,
         queries: DataFrame,
         k: int = 10,
-        nprobe: int = 4,
         metric: str = "l2sq",
         filter_ids: DataFrame | None = None,
+        *,
+        nprobe: int = 8,
     ) -> DataFrame:
         """DataFrame-native ANN for large query batches: `queries` is
         (query_id bigint, qe array<double>).  Probe cells are computed
@@ -502,22 +493,6 @@ class IVFIndex:
                 metric_fn(F.col("qe"), F.col("emb")).alias("dist"),
             ),
             k,
-        )
-
-    def search_ids_df(
-        self,
-        ids_df: DataFrame,
-        k: int = 10,
-        nprobe: int = 4,
-        metric: str = "l2sq",
-    ) -> DataFrame:
-        """Fully distributed id-batch search (the r7 LSH/IVF-PQ
-        contract, completing the family symmetry): `ids_df` is one
-        column `vec_id`; the query vectors come from a semi-join
-        against the corpus and never transit the driver."""
-        return self.search_df(
-            member_queries(self.corpus, ids_df), k=k, nprobe=nprobe,
-            metric=metric,
         )
 
     def cell_sizes(self) -> DataFrame:

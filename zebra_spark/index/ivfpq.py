@@ -23,6 +23,8 @@ constants independent of corpus size.
 
 from __future__ import annotations
 
+from typing import Sequence
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -30,7 +32,7 @@ from pyspark.sql import functions as F
 
 from zebra_spark import functions as zf
 from zebra_spark.functions import rank_top_k
-from zebra_spark.index import check_metric, member_queries, query_frame
+from zebra_spark.index import SearchIds, check_metric, query_frame
 from zebra_spark.io import embeddings_d
 from zebra_spark.index.ivf import IVFIndex, probe_l2sq_scores
 from zebra_spark.index import ivf as _ivf_mod
@@ -46,7 +48,7 @@ from zebra_spark.index.pq import (
 )
 
 
-class IVFPQIndex:
+class IVFPQIndex(SearchIds):
     """Maintained state mirrors PQIndex (VERDICT r6 #1): add() assigns a
     new batch to the FROZEN coarse centroids, PQ-encodes the residuals
     with the FROZEN codebooks, and appends to the cell-partitioned codes
@@ -334,134 +336,39 @@ class IVFPQIndex:
             train_mse=meta.get("train_mse"),
         )
 
-    def search_ids(
+    def search_vectors(
         self,
-        ids,
+        vectors: np.ndarray,
         k: int = 10,
-        nprobe: int = 4,
+        metric: str = "l2sq",
+        query_ids: Sequence[int] | None = None,
+        filter_ids: DataFrame | None = None,
+        *,
+        nprobe: int = 8,
         refine: int = 100,
     ) -> DataFrame:
-        ids = [int(i) for i in ids]
-        rows = (
-            self.corpus.filter(F.col("vec_id").isin(ids))
-            .select(F.col("vec_id").alias("query_id"), F.col("emb").alias("qe"))
-            .collect()
-        )
-        if not rows:
-            raise ValueError("no query vectors found")
-        qids = np.array([r.query_id for r in rows], dtype=np.int64)
-        Q = np.array([r.qe for r in rows], dtype=np.float64)
-        return self._search(qids, Q, k=k, nprobe=nprobe, refine=refine)
-
-    def _search(
-        self,
-        qids: np.ndarray,
-        Q: np.ndarray,
-        k: int,
-        nprobe: int,
-        refine: int,
-    ) -> DataFrame:
-        cents, cb = self.centroids, self.codebooks
-        m = cb.shape[0]
-        nq = len(qids)
-        nprobe = min(nprobe, len(cents))  # same clamp as search_df
-
-        # nprobe nearest cells per query (numpy over the small centroid
-        # matrix, guarded ranking), then per-(query, probed-cell)
-        # residual LUTs — size nq x nprobe x m x kk doubles, bounded by
-        # the query batch
-        d2 = probe_l2sq_scores(Q, cents)
-        probe = np.argsort(d2, axis=1)[:, :nprobe]  # (nq, nprobe)
-        luts: dict[int, list[tuple[int, np.ndarray]]] = {}
-        for qi in range(nq):
-            for c in probe[qi]:
-                luts.setdefault(int(c), []).append(
-                    (qi, _residual_lut(Q[qi] - cents[c], cb))  # (m, kk)
-                )
-
-        # static IN filter on the partition column: the probed-cell list
-        # is known driver-side and tiny (<= nq x nprobe), so this prunes
-        # at PLAN time — on the cell-partitioned codes table written by
-        # save(), non-probed cells are file SKIPS (PartitionFilters in
-        # the scan node), with no dynamic-partition-pruning machinery
-        # needed.  The previous broadcast-join formulation only pruned
-        # when AQE's DPP chose to fire.  Measured in
-        # scripts/pq_scale_check.py (files read vs skipped).
-        probe_cells = sorted({int(c) for row in probe for c in row})
-        pruned = self.coded.filter(F.col("cell_id").isin(probe_cells))
-        qid_arr = qids.copy()
-
-        def scan(batches):
-            for pdf in batches:
-                cells = np.asarray(pdf["cell_id"], dtype=np.int64)
-                vids = np.asarray(pdf["vec_id"], dtype=np.int64)
-                C = np.array(pdf["codes"].tolist(), dtype=np.int64)
-                out_q, out_v, out_d = [], [], []
-                for c in np.unique(cells):
-                    if int(c) not in luts:
-                        continue
-                    mask = cells == c
-                    Cc, Vc = C[mask], vids[mask]
-                    for qi, lut in luts[int(c)]:
-                        adist = np.zeros(len(Cc))
-                        for s in range(m):
-                            adist += lut[s][Cc[:, s]]
-                        keep = min(refine, len(Cc))
-                        part = np.argpartition(adist, keep - 1)[:keep]
-                        out_q.append(np.full(keep, qid_arr[qi]))
-                        out_v.append(Vc[part])
-                        out_d.append(adist[part])
-                if not out_q:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "vec_id": np.concatenate(out_v),
-                        "adist": np.concatenate(out_d),
-                    }
-                )
-
-        scored = pruned.mapInPandas(
-            scan, "query_id bigint, vec_id bigint, adist double"
-        )
-        cand = _refine_candidates(scored, refine)
-        return rank_top_k(
-            cand.join(self.corpus, "vec_id")
-            .join(F.broadcast(query_frame(self.spark, Q, qids)), "query_id")
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                zf.l2sq(F.col("qe"), F.col("emb")).alias("dist"),
-            ),
-            k,
-        )
-
-    def search(
-        self, vectors: np.ndarray, k: int, metric: str, opts: dict,
-        query_ids=None, filter_ids: DataFrame | None = None,
-    ) -> DataFrame:
-        """The facade's search (ZebraDatabase.query_vectors): search_df,
-        which _search does not match row for row, with index_options'
-        `nprobe` (default 8) and `refine` (default 100)."""
-        check_metric(type(self), metric)
+        """A driver-side batch (query ids default to the row positions),
+        shipped as a small frame to search_df: the probe join needs the
+        query vectors per (query, cell) row, so there is one ADC scan."""
         return self.search_df(
-            query_frame(self.spark, vectors, query_ids), k=k,
-            nprobe=opts.get("nprobe", 8), refine=opts.get("refine", 100),
-            filter_ids=filter_ids,
+            query_frame(self.spark, vectors, query_ids), k, metric,
+            filter_ids, nprobe=nprobe, refine=refine,
         )
 
     def search_df(
         self,
         queries: DataFrame,
         k: int = 10,
-        nprobe: int = 4,
-        refine: int = 100,
+        metric: str = "l2sq",
         filter_ids: DataFrame | None = None,
+        *,
+        nprobe: int = 8,
+        refine: int = 100,
     ) -> DataFrame:
-        """Distributed IVF-PQ search for LARGE query batches: `queries`
-        is (query_id bigint, qe array<double>) and NOTHING
-        batch-proportional touches the driver (the PQ/LSH search_df
-        contract, extended to the coarse-quantized layout).
+        """Distributed IVF-PQ search: `queries` is (query_id bigint, qe
+        array<double>) and NOTHING batch-proportional touches the driver
+        (the LSH/IVF search_df contract, extended to the
+        coarse-quantized layout).
 
         Plan shape:
         1. probe assignment: one mapInPandas over the query batch emits
@@ -475,18 +382,14 @@ class IVFPQIndex:
            numpy take+sum, emitting a partial top-`refine`;
         4. global per-query top-`refine` window, exact re-rank against
            the full vectors (distances exact, quantization affects
-           recall only — same guarantee as _search).
-
-        search_ids/_search stay the low-latency path for driver-sized
-        batches (their per-query LUTs ride the scan closure instead of
-        a join).  Results match _search for any refine that captures
-        the true top-k candidates (parity test in tests/test_ivfpq.py).
+           recall only).
 
         filter_ids (r16, VERDICT r15 #4): a one-column (vec_id) frame
         of ADMISSIBLE neighbours, semi-joined into the coded table
         before the probe join — excluded rows are never ADC-scored and
         never consume refine slots (the pre-filter contract shared by
         all four index families)."""
+        check_metric(type(self), metric)
         cents, cb = self.centroids.copy(), self.codebooks.copy()
         m = cb.shape[0]
         # clamp: argsort slice below yields min(nprobe, k_coarse)
@@ -558,16 +461,6 @@ class IVFPQIndex:
                 zf.l2sq(F.col("qe"), F.col("emb")).alias("dist"),
             ),
             k,
-        )
-
-    def search_ids_df(
-        self, ids_df: DataFrame, k: int = 10, nprobe: int = 4, refine: int = 100
-    ) -> DataFrame:
-        """Corpus-member queries, fully distributed (semi-join the id
-        frame to the corpus, then search_df)."""
-        return self.search_df(
-            member_queries(self.corpus, ids_df), k=k, nprobe=nprobe,
-            refine=refine,
         )
 
     def cell_sizes(self) -> DataFrame:

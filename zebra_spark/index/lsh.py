@@ -36,7 +36,7 @@ from __future__ import annotations
 import json
 import math
 from dataclasses import dataclass
-from typing import Iterable, Sequence
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from zebra_spark import functions as zf
 from zebra_spark.functions import rank_top_k
-from zebra_spark.index import member_queries, query_frame
+from zebra_spark.index import SearchIds, member_queries, query_frame
 from zebra_spark.io import embeddings_d
 
 
@@ -196,17 +196,6 @@ def _assign_op(normals: np.ndarray, constants: np.ndarray, split_meta: dict):
 _INDEX_SCHEMA = "tree_id int, bucket_id bigint, nbits int, vec_id bigint"
 _KEYS_SCHEMA = "query_id bigint, tree_id int, bucket_id bigint, nbits int"
 
-# id batches above this route from the collecting search_ids /
-# candidates_for_ids paths (driver fetches the batch's vectors, probe
-# keys broadcast — right for CLI-sized batches) to their distributed
-# _df twins (executor-side probe keys, no driver transfer) — the
-# _PROBE_TENSOR_LIMIT pattern: nothing stops a caller handing 10^6 ids
-# to the convenience API, so the convenience API must not funnel 10^6
-# vectors through the driver (r14, VERDICT r13 #4).  Read at call time
-# (driver-side), so tests can override it.
-_IDS_COLLECT_LIMIT = 4096
-
-
 def _probe_keys_np(
     vectors: np.ndarray,
     normals: np.ndarray,
@@ -261,7 +250,7 @@ def _probe_op(normals, constants, split_meta, probes: int):
     return op
 
 
-class LSHIndex:
+class LSHIndex(SearchIds):
     """A built index: hyperplanes (driver-side numpy, broadcastable) +
     the bucket-assignment DataFrame (tree_id, bucket_id, nbits, vec_id).
 
@@ -672,17 +661,6 @@ class LSHIndex:
 
     # -- search (≙ LSHIndex::search, lsh.rs:544-565) ----------------------
 
-    def search(
-        self, vectors: np.ndarray, k: int, metric: str, opts: dict,
-        query_ids=None, filter_ids: DataFrame | None = None,
-    ) -> DataFrame:
-        """The facade's search (ZebraDatabase.query_vectors): multi-probe
-        breadth from index_options' `probes` (default 8)."""
-        return self.search_vectors(
-            vectors, k=k, metric=metric, probes=opts.get("probes", 8),
-            query_ids=query_ids, filter_ids=filter_ids,
-        )
-
     def probe_keys(self, vectors: np.ndarray, probes: int = 1) -> pd.DataFrame:
         """(query_id, tree_id, bucket_id, nbits) probe set.  probes > 1
         enables multi-probe: flip the `probes-1` lowest-|margin| sign
@@ -722,9 +700,10 @@ class LSHIndex:
         vectors: np.ndarray,
         k: int = 10,
         metric: str = "l2sq",
-        probes: int = 8,
         query_ids: Sequence[int] | None = None,
         filter_ids: DataFrame | None = None,
+        *,
+        probes: int = 8,
     ) -> DataFrame:
         """Two-phase ANN: partition-pruned candidate join, then exact
         re-rank — the plan-shape twin of lsh.rs:552-564.  Probe keys are
@@ -784,8 +763,9 @@ class LSHIndex:
         queries: DataFrame,
         k: int = 10,
         metric: str = "l2sq",
-        probes: int = 8,
         filter_ids: DataFrame | None = None,
+        *,
+        probes: int = 8,
     ) -> DataFrame:
         """DataFrame-native ANN for LARGE query batches: `queries` is
         (query_id bigint, qe array<double>); probe keys are computed
@@ -806,83 +786,15 @@ class LSHIndex:
             metric,
         )
 
-    def search_ids_df(
-        self,
-        ids_df: DataFrame,
-        k: int = 10,
-        metric: str = "l2sq",
-        probes: int = 8,
-    ) -> DataFrame:
-        """Corpus-member queries that stay DISTRIBUTED end to end:
-        `ids_df` has one column `vec_id`; the id batch semi-joins to the
-        corpus for its vectors and flows through search_df's
-        executor-side probe path (mapInPandas keys -> bucket join ->
-        re-rank).  search_ids/candidates_for_ids collect the batch's
-        vectors to the driver first — right for CLI-sized batches
-        (their probe keys then broadcast), but an id-batch-proportional
-        driver transfer; this variant removes it, so screening a
-        million corpus members against the forest shuffles instead of
-        funneling vectors through the driver (VERDICT r6 #6).  Parity
-        with search_ids is pinned by tests/test_lsh.py."""
-        return self.search_df(
-            member_queries(self.corpus, ids_df), k=k, metric=metric,
-            probes=probes,
-        )
-
-    def _member_vectors(self, ids: list[int], ids_df: DataFrame):
-        """(present ids in input order, their vectors) — collected to
-        the driver, for the CLI-sized batches of the collecting paths."""
-        rows = (
-            self.corpus.join(F.broadcast(ids_df), "vec_id").select("vec_id", "emb").collect()
-        )
-        got = {r.vec_id: r.emb for r in rows}
-        present = [i for i in ids if i in got]
-        return present, np.array([got[i] for i in present], dtype=np.float64)
-
-    def search_ids(
-        self, ids: Iterable[int], k: int = 10, metric: str = "l2sq", probes: int = 8
-    ) -> DataFrame:
-        """Search with corpus members as queries (by vec_id).
-
-        The collecting path (fetch the batch's vectors to the driver,
-        broadcast the probe keys) is the low-latency shape for
-        CLI-sized batches, but its driver transfer grows with the id
-        batch — so batches past _IDS_COLLECT_LIMIT are routed to
-        search_ids_df, whose probe keys are computed executor-side and
-        which never moves a vector through the driver (r14, VERDICT
-        r13 #4 — the _PROBE_TENSOR_LIMIT pattern applied to the last
-        unguarded driver funnel).  Parity of the two paths is pinned
-        by tests/test_lsh.py."""
-        ids = [int(i) for i in ids]
-        ids_df = self.spark.createDataFrame([(i,) for i in ids], "vec_id bigint")
-        if len(ids) > _IDS_COLLECT_LIMIT:
-            return self.search_ids_df(ids_df, k=k, metric=metric, probes=probes)
-        present, vecs = self._member_vectors(ids, ids_df)
-        return self.search_vectors(vecs, k=k, metric=metric, probes=probes, query_ids=present)
-
-    def candidates_for_ids(self, ids: Iterable[int], probes: int = 8) -> DataFrame:
+    def candidates_for_ids(self, ids, probes: int = 8) -> DataFrame:
         """Diagnostic: the deduped (query_id, vec_id) candidate set the
-        two-phase search re-ranks for these corpus-member queries — the
-        pre-rerank stage of search_ids, exposed so callers can measure
-        selectivity/recall without re-implementing the probe path.
-        Large id batches route to the distributed twin, like
-        search_ids."""
-        ids = [int(i) for i in ids]
-        ids_df = self.spark.createDataFrame([(i,) for i in ids], "vec_id bigint")
-        if len(ids) > _IDS_COLLECT_LIMIT:
-            return self.candidates_for_ids_df(ids_df, probes=probes)
-        present, vecs = self._member_vectors(ids, ids_df)
-        return self._candidates(self._driver_keys(vecs, probes, present))
-
-    def candidates_for_ids_df(
-        self, ids_df: DataFrame, probes: int = 8
-    ) -> DataFrame:
-        """Distributed twin of candidates_for_ids (same contract as
-        search_ids_df vs search_ids): the deduped (query_id, vec_id)
-        candidate set, with probe keys computed executor-side — no
-        id-batch-proportional driver transfer."""
+        two-phase search re-ranks for these corpus-member queries (`ids`
+        a list or a one-column vec_id frame) — the pre-rerank stage of
+        search_ids, exposed so callers can measure selectivity/recall
+        without re-implementing the probe path.  Probe keys are computed
+        executor-side, like search_ids'."""
         return self._candidates(
-            self._executor_keys(member_queries(self.corpus, ids_df), probes)
+            self._executor_keys(member_queries(self.corpus, ids), probes)
         )
 
     def compact(self) -> "LSHIndex":

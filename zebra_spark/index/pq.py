@@ -21,8 +21,9 @@ Scale posture:
 - encoding: one distributed mapInPandas pass, codebook in the closure
   (broadcast by the task serializer); output is (vec_id, codes
   array<int>) — no shuffle at all.
-- search (ADC — asymmetric distance computation): each query builds an
-  m x k lookup table of partial squared distances EXECUTOR-side, then
+- search (ADC — asymmetric distance computation): each query of the
+  (bounded) batch gets an m x k lookup table of partial squared
+  distances, built on the driver and shipped in the scan closure; then
   every code row's approximate distance is m table lookups + a sum
   (numpy fancy-indexing over the whole Arrow batch at once).  The scan
   is embarrassingly parallel over code partitions; only the top
@@ -42,7 +43,7 @@ from pyspark.sql import functions as F
 
 from zebra_spark import functions as zf
 from zebra_spark.functions import rank_top_k
-from zebra_spark.index import check_metric, query_frame
+from zebra_spark.index import SearchIds, check_metric, query_frame
 from zebra_spark.io import embeddings_d
 
 
@@ -158,7 +159,7 @@ def retrain_due(n_added: int, n_trained: int, added_frac: float) -> bool:
     return n_added > added_frac * max(n_trained, 1)
 
 
-class PQIndex:
+class PQIndex(SearchIds):
     """`codebooks`: (m, k, dsub) float64, driver-side (constant size);
     `codes`: DataFrame (vec_id bigint, codes array<int>), distributed.
 
@@ -425,55 +426,45 @@ class PQIndex:
 
         return self.codes.mapInPandas(op, "vec_id bigint, emb_hat array<double>")
 
-    def search(
-        self, vectors: np.ndarray, k: int, metric: str, opts: dict,
-        query_ids=None, filter_ids: DataFrame | None = None,
-    ) -> DataFrame:
-        """The facade's search (ZebraDatabase.query_vectors): ADC
-        candidates from index_options' `refine` (default 100)."""
-        check_metric(type(self), metric)
-        return self.search_df(
-            query_frame(self.spark, vectors, query_ids), k=k,
-            refine=opts.get("refine", 100), filter_ids=filter_ids,
-        )
-
-    def search_df(
+    def search_vectors(
         self,
-        queries: DataFrame,
+        vectors: np.ndarray,
         k: int = 10,
-        refine: int = 100,
+        metric: str = "l2sq",
+        query_ids: Sequence[int] | None = None,
         filter_ids: DataFrame | None = None,
+        *,
+        refine: int = 100,
     ) -> DataFrame:
-        """ADC search: `queries` is (query_id bigint, qe array<double>).
-        Returns (query_id, neighbor_id, rank, dist) — dist is the EXACT
-        L2^2 after re-rank, so output quality degrades only via candidate
-        recall, never via distance precision.
+        """ADC search of a driver-side batch; query ids default to the
+        row positions.  Returns (query_id, neighbor_id, rank, dist) —
+        dist is the EXACT L2^2 after re-rank, so output quality degrades
+        only via candidate recall, never via distance precision.
 
-        Plan shape: the bounded query batch is collected once (the same
-        contract as IVFIndex.search_vectors — callers batch queries) and
-        its m x k LUT rides the scan closure.  One mapInPandas scores
-        every code row via numpy take+sum and emits only a PARTIAL
-        top-`refine` per (Arrow batch, query) — the map-side combine for
-        top-k — so the global per-query window shuffles
-        O(partitions x refine) rows, not the corpus.  Only the surviving
-        `refine` candidate ids join back to the full vectors.
+        Plan shape: the batch's (nq, m, k) LUT is built here and rides
+        the scan closure (queries-per-batch is bounded by the caller).
+        One mapInPandas scores every code row via numpy take+sum and
+        emits only a PARTIAL top-`refine` per (Arrow batch, query) — the
+        map-side combine for top-k — so the global per-query window
+        shuffles O(partitions x refine) rows, not the corpus.  Only the
+        surviving `refine` candidate ids join back to the full vectors.
 
         filter_ids (r16, VERDICT r15 #4): a one-column (vec_id) frame
         of ADMISSIBLE neighbours, semi-joined into the CODES side
         before the ADC scan — excluded rows are never scored and never
         consume refine slots (the pre-filter contract shared by all
         four index families)."""
+        check_metric(type(self), metric)
         cb = self.codebooks
         m, kk, dsub = cb.shape
-
-        q_rows = queries.select("query_id", "qe").collect()
-        if not q_rows:
+        Q = np.asarray(vectors, dtype=np.float64)
+        if not len(Q):
             raise ValueError("empty query batch")
-        Q = np.array([r.qe for r in q_rows], dtype=np.float64)
-        qids = np.array([r.query_id for r in q_rows], dtype=np.int64)
+        if query_ids is None:
+            query_ids = range(len(Q))
+        qids = np.array([int(q) for q in query_ids], dtype=np.int64)
         # (nq, m, k) LUT: partial squared distance from each query's
-        # subvector to every codebook entry — built once, shipped in the
-        # closure (queries-per-batch is bounded by the caller)
+        # subvector to every codebook entry
         lut = np.stack(
             [
                 (
@@ -525,11 +516,21 @@ class PQIndex:
             k,
         )
 
-    def search_ids(
-        self, ids: Sequence[int], k: int = 10, refine: int = 100
+    def search_df(
+        self,
+        queries: DataFrame,
+        k: int = 10,
+        metric: str = "l2sq",
+        filter_ids: DataFrame | None = None,
+        *,
+        refine: int = 100,
     ) -> DataFrame:
-        ids = [int(i) for i in ids]
-        q = self.corpus.filter(F.col("vec_id").isin(ids)).select(
-            F.col("vec_id").alias("query_id"), F.col("emb").alias("qe")
+        """ADC search of a (query_id bigint, qe array<double>) frame:
+        the scan closure holds every query's LUT, so the bounded batch
+        is collected once (callers batch queries) and searched by
+        search_vectors — one ADC scan for both entry points."""
+        rows = queries.select("query_id", "qe").collect()
+        return self.search_vectors(
+            np.array([r.qe for r in rows], dtype=np.float64), k, metric,
+            [r.query_id for r in rows], filter_ids, refine=refine,
         )
-        return self.search_df(q, k=k, refine=refine)
