@@ -1070,3 +1070,109 @@ def test_family_search_surface(kind):
     assert knobs(sigs["search_vectors"])
     for n in ("search_vectors", "search_df"):
         assert "filter_ids" in [p.name for p in sigs[n]], n
+
+
+def _live_store(spark, tmp_path, kind, opts):
+    """A small store of `kind` with its index built and live, and the
+    embeddings of its first five rows (vec_id -> vector)."""
+    from zebra_spark.database import ZebraDatabase
+
+    db = ZebraDatabase.create(
+        spark, str(tmp_path / "db"), dim=32, index_kind=kind,
+        index_options=opts,
+    )
+    db.insert_texts([f"river stone moss {i} valley {i % 3}" for i in range(30)])
+    db.index()
+    first = db.embeddings().orderBy("vec_id").limit(5).collect()
+    return db, {r.vec_id: r.embedding for r in first}
+
+
+@pytest.mark.parametrize("kind,opts", FAMILY_OPTS, ids=[k for k, _ in FAMILY_OPTS])
+def test_remove_keeps_live_index(spark, tmp_path, monkeypatch, kind, opts):
+    """A remove drops its rows from the live index through the family's
+    remove() — no retrain, no rebuild — and an ANN query on a live index
+    skips the isEmpty job.  The kept index reads nothing the table swap
+    deleted, so it still serves after every cached frame is dropped, and
+    once it has lost every row it returns the empty result."""
+    import numpy as np
+
+    from zebra_spark.database import ZebraDatabase
+    from zebra_spark.index import family
+
+    db, first = _live_store(spark, tmp_path, kind, opts)
+    victims = list(first)[:3]
+    cls = family(kind)
+
+    def refuse(*a, **kw):
+        raise AssertionError("the live index must not be rebuilt")
+
+    for name in ("from_options", "build", "train"):
+        if hasattr(cls, name):
+            monkeypatch.setattr(cls, name, refuse)
+    monkeypatch.setattr(ZebraDatabase, "is_empty", refuse)
+
+    db.remove(victims)
+    assert db.index() is db._index is not None
+    assert db.meta["indexed_batches"] == -1
+    vectors = np.array(list(first.values()))
+    for _ in range(2):
+        got = {r.vec_id for r in db.query_vectors(vectors, k=5).collect()}
+        assert got and not got & set(victims)
+        spark.catalog.clearCache()
+
+    db.remove([r.vec_id for r in db.embeddings().select("vec_id").collect()])
+    res = db.query_vectors(vectors, k=5)
+    assert res.columns == ["query_id", "vec_id", "rank", "dist", "doc"]
+    assert res.count() == 0
+
+
+def test_index_built_after_remove_holds_no_deleted_rows(spark, tmp_path):
+    """Spark finds a cached plan by the table's path, not by its files,
+    so an index built over the swapped-in table must not reuse the bucket
+    table cached by the build before the remove.  The removed row lies
+    outside the hyperplane sample, so both builds plan the same query."""
+    from pyspark.sql import functions as F
+
+    from zebra_spark.database import ZebraDatabase
+
+    db = ZebraDatabase.create(spark, str(tmp_path / "db"), dim=32, num_trees=2)
+    db.insert_texts([f"river stone moss {i} valley {i % 3}" for i in range(40)])
+    db.index()
+    victim = (
+        db.embeddings().select("vec_id")
+        .orderBy(F.xxhash64("vec_id", F.lit(42)).desc()).first().vec_id
+    )
+    db.remove([victim])
+    rebuilt = db.index(rebuild=True).index_df
+    assert rebuilt.filter(F.col("vec_id") == victim).count() == 0
+    assert rebuilt.select("vec_id").distinct().count() == 39
+
+
+@pytest.mark.parametrize("kind,opts", FAMILY_OPTS[:2], ids=["lsh", "ivf"])
+def test_remove_failing_before_commit_keeps_live_index(
+    spark, tmp_path, monkeypatch, kind, opts
+):
+    """A remove that fails before its commit marker deletes nothing, so
+    the live index must stay as it was: the same object, still serving
+    the rows the failed remove named (IVF's in-place remove must not
+    have touched it)."""
+    import numpy as np
+
+    from zebra_spark.database import ZebraDatabase
+
+    db, first = _live_store(spark, tmp_path, kind, opts)
+    victim, vec = next(iter(first.items()))
+    live = db.index()
+
+    def disk_full(self):
+        raise OSError("simulated failure before the commit marker")
+
+    monkeypatch.setattr(ZebraDatabase, "_write_meta", disk_full)
+    with pytest.raises(OSError, match="simulated failure"):
+        db.remove([victim])
+    monkeypatch.undo()
+
+    assert db.index() is live
+    assert db.count() == 30
+    top = db.query_vectors(np.array([vec]), k=1).collect()
+    assert top[0].vec_id == victim

@@ -192,3 +192,87 @@ def test_injected_decoder_exercises_pil_branch_plumbing(spark):
     assert all(len(r.embedding) == 4 for r in out)
     # constant pixel grid -> uniform unit vector
     assert np.allclose(out[0].embedding, [0.5, 0.5, 0.5, 0.5])
+
+
+# --- the default hashing-TF embedder ----------------------------------------
+
+
+def _hash_tf_shuffle_oracle(df, text_col, id_col, dim):
+    """The explode -> groupBy(id, bucket) -> groupBy(id) -> join back
+    formulation that hash_tf_embedding replaced, kept as its bit-for-bit
+    oracle (it merges rows that share an id)."""
+    tok = df.select(id_col, F.explode(F.split(F.col(text_col), " ")).alias("word"))
+    counts = (
+        tok.withColumn("bucket", F.pmod(F.xxhash64("word"), F.lit(dim)).cast("int"))
+        .groupBy(id_col, "bucket")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    sparse = counts.groupBy(id_col).agg(
+        F.map_from_entries(
+            F.collect_list(
+                F.struct("bucket", F.log1p(F.col("cnt").cast("double")).alias("w"))
+            )
+        ).alias("m")
+    )
+    dense = F.transform(
+        F.sequence(F.lit(0), F.lit(dim - 1)),
+        lambda i: F.coalesce(F.try_element_at("m", i.cast("int")), F.lit(0.0)),
+    )
+    norm = F.sqrt(F.aggregate(dense, F.lit(0.0), lambda acc, x: acc + x * x))
+    unit = F.transform(
+        dense, lambda x: F.when(norm == 0.0, F.lit(0.0)).otherwise(x / norm)
+    )
+    emb = sparse.select(id_col, unit.alias("embedding"))
+    zero = F.transform(F.sequence(F.lit(0), F.lit(dim - 1)), lambda _: F.lit(0.0))
+    return df.join(emb, id_col, "left").withColumn(
+        "embedding", F.coalesce("embedding", zero)
+    )
+
+
+def test_hash_tf_embedding_matches_shuffle_oracle(spark):
+    """The row-local embedder is bit-identical to the shuffle formulation
+    on empty, null, repeated-word, double-space and edge-space texts, its
+    plan has no Exchange, and rows that share an id embed independently
+    (the oracle would merge them)."""
+    import io
+    from contextlib import redirect_stdout
+
+    from zebra_spark.embed import hash_tf_embedding
+
+    texts = [
+        "", None, " ", "a a a a", "word  with  double  spaces", " leading",
+        "trailing ", "the quick brown fox jumps over the lazy dog",
+        "Zebra zebra ZEBRA", "ünïcödé wörds ünïcödé",
+    ] + [" ".join(f"w{(i * j) % 53}" for j in range(i % 25)) for i in range(60)]
+    texts.append(" ".join(f"w{j % 97}" for j in range(3000)))  # a long document
+    df = spark.createDataFrame(list(enumerate(texts)), "id bigint, doc string")
+    for dim in (64, 7):
+        got = {
+            r.id: r.embedding
+            for r in hash_tf_embedding(df, "doc", "id", dim).collect()
+        }
+        want = {
+            r.id: r.embedding
+            for r in _hash_tf_shuffle_oracle(df, "doc", "id", dim).collect()
+        }
+        assert got == want
+        assert got[1] == [0.0] * dim  # a null text is the zero vector
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        hash_tf_embedding(df, "doc", "id").explain("formatted")
+    assert "Exchange" not in buf.getvalue(), buf.getvalue()
+
+    shared = spark.createDataFrame(
+        [(1, "alpha beta"), (1, "gamma"), (2, "alpha beta")], "id bigint, doc string"
+    )
+    rows = hash_tf_embedding(shared, "doc", "id", 16).collect()
+    assert len(rows) == 3
+    by_doc = {}
+    for r in rows:
+        by_doc.setdefault(r.doc, set()).add(tuple(r.embedding))
+    assert len(by_doc["alpha beta"]) == 1  # same text, same vector, any id
+    assert by_doc["gamma"] != by_doc["alpha beta"]
+    solo = spark.createDataFrame([(9, "gamma")], "id bigint, doc string")
+    alone = hash_tf_embedding(solo, "doc", "id", 16).first().embedding
+    assert by_doc["gamma"] == {tuple(alone)}

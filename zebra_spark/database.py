@@ -24,6 +24,7 @@ records (zebra_spark.index lists the families).
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import shutil
@@ -44,12 +45,24 @@ _BATCH_SHIFT = 40  # ids: (batch_no << 40) | monotonic_id
 _AUTO_COMPACT_APPENDS = 8  # compact the index every N incremental adds
 
 
+def _without(index, ids_df: DataFrame):
+    """`index` minus the rows `ids_df` names, leaving `index` itself
+    untouched: LSH's remove() returns a new index, the IVF/PQ families
+    remove in place — on a shallow copy here."""
+    out = copy.copy(index)
+    new = out.remove(ids_df)
+    return out if new is None else new
+
+
 class ZebraDatabase:
     def __init__(self, spark: SparkSession, path: str, meta: dict):
         self.spark = spark
         self.path = path
         self.meta = meta
         self._index = None
+        # table -> the schema its first read inferred: later reads pass
+        # it, which skips Spark's one-task schema-inference job
+        self._schemas: dict = {}
         self._recover_swaps()
 
     def _recover_swaps(self) -> None:
@@ -82,6 +95,10 @@ class ZebraDatabase:
             os.rename(p, f"{p}_old")
         os.rename(f"{p}_tmp", p)
         shutil.rmtree(f"{p}_old", ignore_errors=True)
+        # Spark matches a cached plan by the table's path, not its files:
+        # without this, an index built later over the swapped-in table
+        # would reuse a cached bucket table still holding deleted rows
+        self.spark.catalog.refreshByPath(p)
 
     # -- lifecycle (≙ new/open/open_or_create/save, core.rs:92-190) -------
 
@@ -194,6 +211,7 @@ class ZebraDatabase:
                 pass
         self.meta["n_batches"] = 0
         self._index = None
+        self._schemas.clear()
         self._write_meta()
 
     # -- tables -----------------------------------------------------------
@@ -243,13 +261,17 @@ class ZebraDatabase:
         p = f"{self.path}/{table}"
         if not os.path.exists(p):
             return None
-        df = self.spark.read.parquet(p)
+        schema = self._schemas.get(table)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        df = reader.parquet(p)
         if table == "documents" and "modality" in df.columns:
             # partition discovery type-infers the modality= directory
             # value, so a numeric-looking modality ("modality=123") would
             # come back as int and break unions with the flat-layout /
             # in-memory string schema; pin it (ADVICE r4)
             df = df.withColumn("modality", F.col("modality").cast("string"))
+        # cached after the cast, so later reads type modality as string
+        self._schemas.setdefault(table, df.schema)
         if committed_only:
             bases = self._committed_bases()
             if bases is not None:
@@ -315,14 +337,7 @@ class ZebraDatabase:
     ) -> DataFrame:
         """Embed with the configured model, then append records.
         `manifest_extra` rides the batch manifest (see insert_records)."""
-        # checkpoint BEFORE embedding: hash_tf_embedding joins the tagged
-        # frame back to itself on _tmp_id, and monotonically_increasing_id
-        # is only stable across the two join branches if the lineage is
-        # materialized first
-        tagged = df.withColumn(
-            "_tmp_id", F.monotonically_increasing_id()
-        ).localCheckpoint()
-        emb = self._embed_frame(tagged, text_col)
+        emb = self._embed_frame(df, text_col)
         return self.insert_records(
             emb.select(
                 F.col(text_col).alias("doc"),
@@ -332,16 +347,13 @@ class ZebraDatabase:
             manifest_extra=manifest_extra,
         )
 
-    def _embed_frame(
-        self, df: DataFrame, text_col: str, id_col: str = "_tmp_id"
-    ) -> DataFrame:
+    def _embed_frame(self, df: DataFrame, text_col: str) -> DataFrame:
         """Embed `text_col` with the configured model: the native
-        hashing-TF path for 'hash_tf' (which joins back on the unique
-        `id_col`), else the model-backed pandas_udf (embed_column —
-        factory resolved at plan time, model loaded lazily once per
-        executor)."""
+        row-local hashing-TF path for 'hash_tf', else the model-backed
+        pandas_udf (embed_column — factory resolved at plan time, model
+        loaded lazily once per executor)."""
         if self.meta["model"] == "hash_tf":
-            return hash_tf_embedding(df, text_col, id_col, self.meta["dim"])
+            return hash_tf_embedding(df, text_col, None, self.meta["dim"])
         from zebra_spark.embed import embed_column
 
         udf = embed_column(self.meta["model"])
@@ -423,18 +435,24 @@ class ZebraDatabase:
         # materialize once: stabilizes rows/partitions for the dimension
         # check, the id assignment, and both table writes below
         df = self._materialize(df, reliable, f"in_{base}")
-        # dimension check ≙ Embedding<N>::try_from length validation
-        # (reference src/lib.rs:31-46): schemas are runtime-validated here
-        # instead of const generics (SURVEY §1.3)
+        # one job: rows per source partition (one row each — small at
+        # any data scale) and the dimension check ≙ Embedding<N>::try_from
+        # length validation (reference src/lib.rs:31-46): schemas are
+        # runtime-validated here instead of const generics (SURVEY §1.3)
         dim = self.meta["dim"]
-        n_bad = df.filter(F.size("embedding") != dim).count()
+        counts = (
+            df.groupBy("_pid")
+            .agg(
+                F.count(F.lit(1)).alias("count"),
+                F.sum((F.size("embedding") != dim).cast("int")).alias("bad"),
+            )
+            .collect()
+        )
+        n_bad = sum(r.bad or 0 for r in counts)
         if n_bad:
             raise ValueError(
                 f"{n_bad} record(s) have embedding dimension != {dim}"
             )
-        counts = (
-            df.groupBy("_pid").count().collect()
-        )  # one row per source partition — small at any data scale
         offsets, acc = {}, 0
         for r in sorted(counts, key=lambda r: r._pid):
             offsets[r._pid] = acc
@@ -560,6 +578,11 @@ class ZebraDatabase:
         interrupted run forward past the marker, or discards pre-commit
         _tmp dirs.
 
+        A live index drops the same rows through its family's remove()
+        (≙ Database::remove, core.rs:205-213) instead of being rebuilt.
+        The result is installed only after the swap, so a failure before
+        the commit marker leaves the old index serving.
+
         When the label-propagation state is active (r14, the facade's
         propagate_labels lifecycle) the propagated-label table rides
         the same two-phase swap — a removed vector loses its label row
@@ -618,20 +641,25 @@ class ZebraDatabase:
                 # preserve the modality hive-partitioning across rewrites
                 w = w.partitionBy("modality")
             w.parquet(f"{self.path}/{table}_tmp")
+        index = None if self._index is None else _without(self._index, ids_df)
         # invalidate any persisted index BEFORE the commit marker: once
         # the marker exists the delete is durable, so the index-stale
         # flag must already be durable too (a crash after the marker but
         # before a later meta write would otherwise reopen with a fresh-
         # looking index still holding the deleted vectors)
-        self._index = None
         self.meta["indexed_batches"] = -1
         self._write_meta()
+        self._index = None  # holds the deleted rows from here on
         marker = f"{self.path}/_swap_commit"
         with open(marker, "w") as f:
             json.dump(tables, f)
         for table in tables:
             self._swap_in_tmp(table)
         os.remove(marker)
+        if index is not None:
+            # the swap deleted the files the old corpus read
+            index.corpus = self._corpus()
+        self._index = index
 
     def deduplicate(self) -> int:
         """Exact dedup, first id wins (≙ core.rs:216-224, bitwise compare
@@ -702,7 +730,7 @@ class ZebraDatabase:
             [(i, t) for i, t in enumerate(texts)], "query_id bigint, doc string"
         )
         return self._query_embedded(
-            self._embed_frame(qdf, "doc", "query_id"), "query_id", k, exact, where
+            self._embed_frame(qdf, "doc"), "query_id", k, exact, where
         )
 
     def query_blobs(
@@ -777,8 +805,13 @@ class ZebraDatabase:
                 )
             if len(set(query_ids)) != len(query_ids):
                 raise ValueError("query_ids repeat an id")
-        # ≙ empty-index short-circuit core.rs:272-274
-        if not len(vectors) or self.is_empty():
+        # ≙ empty-index short-circuit core.rs:272-274.  A live index
+        # answers an empty corpus itself, so only the exact path and the
+        # first build (LSHIndex.build refuses an empty corpus) pay the
+        # isEmpty job.
+        if not len(vectors) or (
+            (exact or self._index is None) and self.is_empty()
+        ):
             return self.spark.createDataFrame(
                 [], "query_id bigint, vec_id bigint, rank int, dist double,"
                 " doc string"
@@ -799,7 +832,11 @@ class ZebraDatabase:
         docs = self.documents().select(
             F.col("vec_id"), F.col("doc")
         )
-        return res.withColumnRenamed("neighbor_id", "vec_id").join(docs, "vec_id", "left")
+        return (
+            res.withColumnRenamed("neighbor_id", "vec_id")
+            .join(docs, "vec_id", "left")
+            .select("query_id", "vec_id", "rank", "dist", "doc")
+        )
 
     def _brute_force(self, vectors, k, query_ids=None, filter_ids=None):
         corpus = self._corpus()
@@ -928,7 +965,7 @@ class ZebraDatabase:
         }
         if texts:
             qdf = self.spark.createDataFrame(texts, "sid bigint, doc string")
-            emb = self._embed_frame(qdf, "doc", "sid")
+            emb = self._embed_frame(qdf, "doc")
             for r in emb.select("sid", "embedding").collect():
                 vecs[r.sid] = [float(x) for x in r.embedding]
         rows = [

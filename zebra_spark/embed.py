@@ -2,8 +2,9 @@
 src/model/core.rs:12-37: batch bytes -> fixed-dim float vector).
 
 The default embedder is a deterministic hashing-TF text embedder built
-from pure DataFrame ops (no model download, no UDF): tokenize -> hash
-words into `dim` buckets -> log(1+tf) -> L2 normalize.  It plays the
+from pure DataFrame ops (no model download, no UDF, no shuffle): per
+row, split on spaces -> hash words into `dim` buckets -> log(1+tf) ->
+L2 normalize, all with array functions.  It plays the
 role of BGE-small (src/model/text.rs:11-31) for offline testing: same
 shape (text column -> array<double> column), stable across runs.
 
@@ -28,40 +29,57 @@ from pyspark.sql import functions as F
 DEFAULT_DIM = 64
 
 
-def hash_tf_embedding(df: DataFrame, text_col: str, id_col: str, dim: int = DEFAULT_DIM) -> DataFrame:
+def hash_tf_embedding(
+    df: DataFrame, text_col: str, id_col: str | None, dim: int = DEFAULT_DIM
+) -> DataFrame:
     """Add an `embedding array<double>` column: hashing-TF + L2 norm.
 
-    All native ops: explode -> xxhash64 bucket -> count -> dense array via
-    map lookup -> normalize.  One shuffle (the per-doc groupBy).
+    Row-local: every row embeds on its own, with no shuffle and no join,
+    so rows that share an id embed independently and `id_col` is no
+    longer read (kept for callers that pass it).  A null text gives the
+    zero vector.
+
+    Each step is its own projection, so Spark evaluates it once per row:
+    folded into one nested expression, the bucket array and the norm
+    would be recomputed for every one of the `dim` elements.  A bucket's
+    count is the size drop of a native `array_remove`, not a `filter`
+    lambda per word: lambdas run interpreted, and counting with them was
+    about 5x slower on 10k-word documents.  A row still costs about
+    `dim` x words element scans, so documents of ~100k words embed
+    slower than a shuffle would (SCALING.md, "Embedding-path
+    throughput").
     """
-    tok = df.select(
-        id_col, F.explode(F.split(F.col(text_col), " ")).alias("word")
+    rng = F.sequence(F.lit(0), F.lit(dim - 1)).cast("array<bigint>")
+    words = F.coalesce(
+        F.split(F.col(text_col), " "), F.array().cast("array<string>")
     )
-    counts = (
-        tok.withColumn("bucket", F.pmod(F.xxhash64("word"), F.lit(dim)).cast("int"))
-        .groupBy(id_col, "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    sparse = counts.groupBy(id_col).agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("bucket", F.log1p(F.col("cnt").cast("double")).alias("w")))
-        ).alias("m")
-    )
-    dense = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda i: F.coalesce(F.try_element_at("m", i.cast("int")), F.lit(0.0)),
-    )
-    norm = F.sqrt(
-        F.aggregate(dense, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    unit = F.transform(dense, lambda x: F.when(norm == 0.0, F.lit(0.0)).otherwise(x / norm))
-    emb = sparse.select(id_col, unit.alias("embedding"))
-    return df.join(emb, id_col, "left").withColumn(
-        "embedding",
-        F.coalesce(
+    buckets = F.col("_htf_b")
+    norm = F.col("_htf_n")
+    return (
+        df.withColumn(
+            "_htf_b", F.transform(words, lambda w: F.pmod(F.xxhash64(w), F.lit(dim)))
+        )
+        .withColumn(
+            "_htf_d",
+            F.transform(
+                rng,
+                lambda i: F.log1p(
+                    F.size(buckets) - F.size(F.array_remove(buckets, i))
+                ),
+            ),
+        )
+        .withColumn(
+            "_htf_n",
+            F.sqrt(F.aggregate("_htf_d", F.lit(0.0), lambda acc, x: acc + x * x)),
+        )
+        .withColumn(
             "embedding",
-            F.transform(F.sequence(F.lit(0), F.lit(dim - 1)), lambda _: F.lit(0.0)),
-        ),
+            F.transform(
+                "_htf_d",
+                lambda x: F.when(norm == 0.0, F.lit(0.0)).otherwise(x / norm),
+            ),
+        )
+        .drop("_htf_b", "_htf_d", "_htf_n")
     )
 
 

@@ -303,7 +303,7 @@ class IVFIndex(SearchIds):
         self.assignments = self.assignments.join(
             ids, "vec_id", "left_anti"
         ).localCheckpoint()
-        self.corpus = self.corpus.join(ids, "vec_id", "left_anti").localCheckpoint()
+        self.corpus = self.corpus.join(ids, "vec_id", "left_anti")
         self._sizes = None
 
     def save(self, path: str) -> None:

@@ -231,9 +231,7 @@ class IVFPQIndex(SearchIds):
         convention."""
         ids = ids_df.select("vec_id")
         self.coded = self.coded.join(ids, "vec_id", "left_anti").localCheckpoint()
-        self.corpus = self.corpus.join(
-            ids, "vec_id", "left_anti"
-        ).localCheckpoint()
+        self.corpus = self.corpus.join(ids, "vec_id", "left_anti")
 
     def needs_retrain(self, added_frac: float = 0.5) -> bool:
         return retrain_due(self.n_added, self.n_trained, added_frac)

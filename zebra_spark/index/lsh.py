@@ -569,12 +569,14 @@ class LSHIndex(SearchIds):
         build, so inserting rows is just leaf assignment for the NEW
         rows + append — no tree rebuild (the hash formulation's payoff
         vs the reference's leaf-split rewrite at lsh.rs:368-377).  The
-        append is an unpartitioned union; `appends` counts them so the
-        owner can compact() once the probe layout degrades."""
+        assignment is materialized once, here, so no search or remove
+        re-runs it.  The append is an unpartitioned union; `appends`
+        counts them so the owner can compact() once the probe layout
+        degrades."""
         add_df = new_corpus.mapInPandas(
             _assign_op(self.normals, self.constants, self.split_meta),
             _INDEX_SCHEMA,
-        )
+        ).localCheckpoint()
         return LSHIndex(
             self.spark,
             self.corpus.unionByName(new_corpus),
@@ -586,17 +588,24 @@ class LSHIndex(SearchIds):
             appends=self.appends + 1,
         )
 
-    def remove(self, ids: Sequence[int]) -> "LSHIndex":
+    def remove(self, ids) -> "LSHIndex":
         """≙ Database::remove (core.rs:205-213) — anti-join everywhere,
-        completing the reference's partial cleanup (lsh.rs:487 note)."""
-        ids_df = self.spark.createDataFrame([(int(i),) for i in ids], "vec_id bigint")
+        completing the reference's partial cleanup (lsh.rs:487 note).
+        `ids` is a list or a frame with a vec_id column.  Returns a new
+        index whose bucket table is materialized, so it no longer reads
+        `ids` or anything `ids` was computed from."""
+        if not isinstance(ids, DataFrame):
+            ids = F.broadcast(
+                self.spark.createDataFrame([(int(i),) for i in ids], "vec_id bigint")
+            )
+        ids = ids.select("vec_id")
         return LSHIndex(
             self.spark,
-            self.corpus.join(F.broadcast(ids_df), "vec_id", "left_anti"),
+            self.corpus.join(ids, "vec_id", "left_anti"),
             self.options,
             self.normals,
             self.constants,
-            self.index_df.join(F.broadcast(ids_df), "vec_id", "left_anti"),
+            self.index_df.join(ids, "vec_id", "left_anti").localCheckpoint(),
             self.split_meta,
             self.appends,
         )

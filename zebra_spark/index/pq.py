@@ -306,9 +306,7 @@ class PQIndex(SearchIds):
         staleness signal), not the live row count."""
         ids = ids_df.select("vec_id")
         self.codes = self.codes.join(ids, "vec_id", "left_anti").localCheckpoint()
-        self.corpus = self.corpus.join(
-            ids, "vec_id", "left_anti"
-        ).localCheckpoint()
+        self.corpus = self.corpus.join(ids, "vec_id", "left_anti")
 
     def needs_retrain(self, added_frac: float = 0.5) -> bool:
         """Retrain trigger: the appended mass exceeds `added_frac` of
