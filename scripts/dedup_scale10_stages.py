@@ -24,6 +24,7 @@ def main() -> None:
 
     import zebra_spark
     from zebra_spark.caching import release_caches
+    from zebra_spark.io import load
     from zebra_spark.queries import dedup
     from zebra_spark.session import get_spark
     from scripts.dedup_scale10 import replicated
@@ -37,7 +38,7 @@ def main() -> None:
         n_rows = replicated(spark, sf, k, out)
 
         t0 = time.perf_counter()
-        sigs = dedup._minhash_sigs(spark, out)
+        sigs = dedup._minhash_sigs(load(spark, out, "documents"))
         n_sigs = sigs.count()
         t_sigs = time.perf_counter() - t0
 

@@ -36,9 +36,11 @@ def pairs_b(spark, sf_dir: str):
         _minhash_sigs,
     )
     from zebra_spark.functions import rnd
+    from zebra_spark.io import load
     from zebra_spark.queries.text import tokens
 
-    sigs = tracked_persist(_minhash_sigs(spark, sf_dir, N_HASHES, N_BANDS))
+    docs = load(spark, sf_dir, "documents")
+    sigs = tracked_persist(_minhash_sigs(docs, N_HASHES, N_BANDS))
     keyed = sigs.select("doc_id", F.xxhash64("band", "key").alias("bk"))
     a = keyed.select(F.col("doc_id").alias("doc_a"), "bk")
     b = keyed.select(F.col("doc_id").alias("doc_b"), F.col("bk").alias("bk_b"))

@@ -20,6 +20,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     import zebra_spark
+    from zebra_spark.io import load
     from zebra_spark.queries import dedup
     from zebra_spark.session import get_spark
 
@@ -27,14 +28,15 @@ def main() -> None:
     spark = get_spark("minhash-stages", cpus="32")
 
     # warm
-    dedup._token_ids(spark, SF).count()
+    docs = load(spark, SF, "documents")
+    dedup._token_ids(docs).count()
 
     t0 = time.perf_counter()
-    n_tok = dedup._token_ids(spark, SF).count()
+    n_tok = dedup._token_ids(docs).count()
     t_tok = time.perf_counter() - t0
 
     t0 = time.perf_counter()
-    sigs = dedup._minhash_sigs(spark, SF)
+    sigs = dedup._minhash_sigs(docs)
     n_sigs = sigs.count()
     t_sigs = time.perf_counter() - t0
 

@@ -195,6 +195,136 @@ def test_pair_table_build_once_and_matches_inline(spark):
     assert dd._DERIVED[key] == path_first
 
 
+def _fresh_corpus(tmp_path) -> str:
+    """A copy of the oracle documents under a path no registry key has
+    seen yet."""
+    import shutil
+    from pathlib import Path
+
+    src = Path(SF_ORACLE) / "documents.parquet"
+    tmp_path.mkdir(parents=True, exist_ok=True)
+    dst = tmp_path / "documents.parquet"
+    if src.is_dir():
+        shutil.copytree(src, dst)
+    else:
+        shutil.copy(src, dst)
+    return str(tmp_path)
+
+
+def _jobs_started(spark, fn) -> int:
+    """Spark jobs `fn()` starts, counted by job group.  A marker job in
+    a second group is awaited first: listener events arrive in order,
+    so once the marker is visible every earlier job start is too."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    gid, marker = f"t-{uuid.uuid4()}", f"m-{uuid.uuid4()}"
+    sc.setJobGroup(gid, "counted")
+    try:
+        fn()
+        sc.setJobGroup(marker, "marker")
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(marker):
+        assert time.monotonic() < deadline, "marker job never reported"
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(gid))
+
+
+@pytest.mark.parametrize("n_hashes", [16, 128])
+def test_pair_table_build_skips_sig_and_tokset_tables(spark, tmp_path, n_hashes):
+    """The full pair-table build computes signatures and token sets
+    inline from one documents scan: it registers (and writes) only the
+    minhash table, adds no exit handler, and its rows equal the
+    formulation over the materialized sig_table + tokset_table."""
+    import atexit
+
+    from pyspark.sql import functions as F
+
+    from zebra_spark.queries import dedup as dd
+
+    sf = _fresh_corpus(tmp_path)
+    before = dd.derived_registry_snapshot()
+    try:
+        handlers = atexit._ncallbacks()
+        pt = dd.pair_table(spark, sf, n_hashes, dd.N_BANDS).toPandas()
+        assert atexit._ncallbacks() == handlers
+        added = set(dd.derived_registry_snapshot()) - set(before)
+        assert [k[0] for k in added] == ["minhash"]
+
+        keyed = dd.sig_table(spark, sf, n_hashes, dd.N_BANDS).select(
+            "doc_id", F.xxhash64("band", "key").alias("bk")
+        )
+        a = keyed.select(F.col("doc_id").alias("doc_a"), "bk")
+        b = keyed.select(
+            F.col("doc_id").alias("doc_b"), F.col("bk").alias("bk_b")
+        )
+        cand = (
+            a.join(
+                b,
+                (F.col("bk") == F.col("bk_b"))
+                & (F.col("doc_a") < F.col("doc_b")),
+            )
+            .select("doc_a", "doc_b")
+            .distinct()
+        )
+        old = dd._verify_scored(cand, dd.tokset_table(spark, sf)).toPandas()
+        assert len(pt) > 0
+        assert _vhash(pt) == _vhash(old)
+    finally:
+        dd.restore_derived_registry(before)
+
+
+def test_derived_table_reread_runs_no_spark_job(spark, tmp_path):
+    """A built derived table is re-read with the schema it was written
+    with: a second pair_table / cluster_label_table call starts no
+    Spark job (no schema inference).  A path registered from outside —
+    here a maintained table in the epoch=N layout, re-pointing a key
+    that was built — reads with inference and drops `epoch`; restoring
+    the built path brings the job-free read back."""
+    from pathlib import Path
+
+    from pyspark.sql import functions as F
+
+    from zebra_spark.queries import dedup as dd
+
+    sf = _fresh_corpus(tmp_path / "corpus")
+    before = dd.derived_registry_snapshot()
+    try:
+        pairs = dd.pair_table(spark, sf)
+        labels = dd.cluster_label_table(spark, sf)
+        assert labels.count() > 0
+        assert _jobs_started(spark, lambda: dd.pair_table(spark, sf)) == 0
+        assert (
+            _jobs_started(spark, lambda: dd.cluster_label_table(spark, sf))
+            == 0
+        )
+        key = ("minhash", str(Path(sf).resolve()), dd.N_HASHES, dd.N_BANDS, None)
+        assert pairs.schema == spark.read.parquet(dd._DERIVED[key]).schema
+
+        maintained = str(tmp_path / "maintained")
+        pairs.withColumn("epoch", F.lit(3)).write.partitionBy("epoch").parquet(
+            maintained
+        )
+        prev = dd.register_maintained_table("minhash", sf, maintained)
+        try:
+            got = []
+            assert _jobs_started(
+                spark, lambda: got.append(dd.pair_table(spark, sf))
+            ) > 0
+            assert got[0].columns == pairs.columns
+            assert got[0].count() == pairs.count()
+        finally:
+            dd.register_maintained_table("minhash", sf, prev)
+        assert _jobs_started(spark, lambda: dd.pair_table(spark, sf)) == 0
+    finally:
+        dd.restore_derived_registry(before)
+
+
 def test_cosine_pair_table_matches_inline(spark):
     """cosine_pair_table returns exactly the inline blocked+scored
     pairs (bit-exact doubles through the parquet round-trip)."""

@@ -179,6 +179,39 @@ def test_edges_cheap_same_labels(spark):
     assert a == b
 
 
+def test_connected_components_small_graph_makes_no_spill_dir(
+    spark, monkeypatch, cc_path
+):
+    """The small-graph path over cheap edges never spills, so it makes
+    no zebra_cc_* tempdir and registers no exit handler; the iterative
+    path makes exactly one of each, on its first spill."""
+    import atexit
+
+    import zebra_spark.graph as g
+
+    made = []
+    real_mkdtemp = g.tempfile.mkdtemp
+
+    def mkdtemp(*args, **kwargs):
+        made.append(real_mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(g.tempfile, "mkdtemp", mkdtemp)
+    nodes = spark.createDataFrame([(i,) for i in range(30)], "id bigint")
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 29, 2)], "src bigint, dst bigint"
+    )
+    handlers = atexit._ncallbacks()
+    out = {
+        r.id: r.component
+        for r in g.connected_components(nodes, edges, edges_cheap=True).collect()
+    }
+    assert out == {i: i - i % 2 for i in range(30)}
+    spills = 0 if cc_path == "fast_path" else 1
+    assert len(made) == spills
+    assert atexit._ncallbacks() - handlers == spills
+
+
 def test_incremental_components(spark):
     """Star-collapse correctness: updating a maintained labeling with a
     delta (merging two old components, extending a chain, adding brand

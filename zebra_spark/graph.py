@@ -25,6 +25,7 @@ rounds are kept.
 from __future__ import annotations
 
 import atexit
+import functools
 import shutil
 import tempfile
 
@@ -156,15 +157,23 @@ def connected_components(
 
     The returned DataFrame reads the final round's spill files; they
     stay on disk until interpreter exit (atexit) unless `spill_dir` is
-    given, in which case the caller owns cleanup.
+    given, in which case the caller owns cleanup.  A call that never
+    spills (the small-graph path over cheap edges) creates no
+    directory and registers no exit handler.
     """
     spark = nodes.sparkSession
-    base = spill_dir or tempfile.mkdtemp(prefix="zebra_cc_")
-    if spill_dir is None:
+
+    @functools.cache
+    def spill_base() -> str:
+        if spill_dir:
+            return spill_dir
+        base = tempfile.mkdtemp(prefix="zebra_cc_")
         atexit.register(shutil.rmtree, base, ignore_errors=True)
+        return base
 
     def cut(df: DataFrame, r: int) -> DataFrame:
         """Materialize round r and sever all lineage/planner state."""
+        base = spill_base()
         df.write.mode("overwrite").parquet(f"{base}/round_{r}")
         # keep r and r-1 (the convergence comparison target); drop r-2
         _fs_rmtree(spark, f"{base}/round_{r - 2}")
@@ -180,10 +189,9 @@ def connected_components(
     if edges_cheap:
         edges_m = edges.select("src", "dst")
     else:
-        edges.select("src", "dst").write.mode("overwrite").parquet(
-            f"{base}/edges"
-        )
-        edges_m = spark.read.parquet(f"{base}/edges")
+        path = f"{spill_base()}/edges"
+        edges.select("src", "dst").write.mode("overwrite").parquet(path)
+        edges_m = spark.read.parquet(path)
 
     # Small-graph fast path: below this edge count, a single-TASK
     # union-find (executor-side mapInPandas over one partition — no

@@ -205,7 +205,8 @@ def ingest_base_state(spark: SparkSession, sf_dir: str) -> str:
     optimization pass, VERDICT r17 #1): the pre-batch "maintained"
     tables — the non-batch (% 10 != 0) slices of the session pair /
     cosine-pair / assignment tables, plus the pre-batch cluster labels
-    (base_cluster_labels) — materialized ONCE per dataset per session
+    (base_cluster_labels) and the signature / token-set tables the
+    lexical delta reads (sig_table, tokset_table) — materialized ONCE per dataset per session
     under the derived-table registry, exactly like pair_table.  In
     production these files simply EXIST (they are the maintained
     parquet the previous tick left); the fixture has no pre-existing
@@ -215,8 +216,6 @@ def ingest_base_state(spark: SparkSession, sf_dir: str) -> str:
     `ingest_base_build` row, the same split cluster_label_build got in
     r16).  Returns the state path with minhash/ cosine/ cosassign/
     subdirs."""
-    import atexit
-    import shutil
     import tempfile
     from concurrent.futures import ThreadPoolExecutor
     from pathlib import Path
@@ -230,9 +229,8 @@ def ingest_base_state(spark: SparkSession, sf_dir: str) -> str:
         with dd._DERIVED_LOCK:
             path = dd._DERIVED.get(key)
             if path is None:
-                base = tempfile.mkdtemp(prefix="zebra_derived_")
-                atexit.register(shutil.rmtree, base, ignore_errors=True)
-                path = f"{base}/data"
+                # owned: removed on registry restore or at exit
+                path = f"{tempfile.mkdtemp(prefix='zebra_derived_')}/data"
                 dd._OWNED_PATHS.add(path)
                 new_l = (F.col("doc_a") % 10 == 0) | (
                     F.col("doc_b") % 10 == 0
@@ -254,6 +252,13 @@ def ingest_base_state(spark: SparkSession, sf_dir: str) -> str:
                     # otherwise re-pays that CC after the registry
                     # restore
                     dd.base_cluster_labels(spark, sf_dir)
+                    # and so do the signature and token-set tables the
+                    # lexical delta joins the batch against (production
+                    # appends the batch to both before the delta runs);
+                    # the full pair build computes its own inline, so
+                    # nothing else would materialize them before a trial
+                    dd.sig_table(spark, sf_dir)
+                    dd.tokset_table(spark, sf_dir)
                     with ThreadPoolExecutor(max_workers=3) as ex:
                         list(ex.map(
                             lambda kv: kv[1].write.mode("overwrite").parquet(

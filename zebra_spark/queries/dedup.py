@@ -26,6 +26,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from zebra_spark import functions as zf
 from zebra_spark.functions import rnd
@@ -33,6 +34,7 @@ from zebra_spark.io import embeddings_d, spread_scan
 from zebra_spark.queries.text import (
     _SQL_SHARD_HASH,
     N_SHARDS,
+    doc_tokens,
     sql_word_hash,
     tokens,
     word_hash_expr,
@@ -58,18 +60,21 @@ _SQL_TOK = f"""
 """
 
 
-def _token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tok = tokens(spark, sf_dir, distinct=True).select("doc_id", "word")
+def _token_ids(docs: DataFrame) -> DataFrame:
+    """(doc_id, tid): the distinct token ids of a (doc_id, text, ...)
+    documents frame — the input of the grouped MinHash formulation and
+    of SimHash."""
+    tok = doc_tokens(docs, "doc_id").distinct()
     return tok.select("doc_id", word_hash_expr("word").alias("tid"))
 
 
 def _minhash_sigs(
-    spark: SparkSession,
-    sf_dir: str,
+    docs: DataFrame,
     n_hashes: int = N_HASHES,
     n_bands: int = N_BANDS,
 ) -> DataFrame:
-    """(doc_id, band, key): banded MinHash signatures.
+    """(doc_id, band, key): banded MinHash signatures of a (doc_id,
+    text, ...) documents frame.
 
     Two formulations, picked by permutation count (both measured at
     sf0.1, bit-identical output):
@@ -89,13 +94,9 @@ def _minhash_sigs(
     The DuckDB oracle keeps the grouped formulation — same arithmetic,
     same results either way."""
     if n_hashes <= 32:
-        from zebra_spark.io import load
-
-        return batch_signatures(
-            load(spark, sf_dir, "documents"), n_hashes, n_bands
-        )
-    t2 = _token_ids(spark, sf_dir)
-    params = spark.createDataFrame(
+        return batch_signatures(docs, n_hashes, n_bands)
+    t2 = _token_ids(docs)
+    params = docs.sparkSession.createDataFrame(
         [(j, 2 * j + 1, 17 * j + 29) for j in range(n_hashes)],
         "j int, a bigint, b bigint",
     )
@@ -192,12 +193,16 @@ def _minhash_scored(
     # key, but the join lets AQE's skew-join splitting spread a hot
     # band key across tasks, while a groupBy/explode pins each key's
     # whole pair fan-out to one task (measured slower on the
-    # saturation-dense fixture).  Both join sides read the sig_table
-    # parquet (since r6) — a scan with stats, so every downstream
-    # broadcast decision is preserved; the r3-r5 decision tree for this
-    # frame (localCheckpoint REJECTED for stats loss, persist adopted,
-    # then the parquet table) is recorded in ARCHITECTURE.md
-    # "Materializing a twice-referenced frame".
+    # saturation-dense fixture).  Signatures and token sets are
+    # computed inline from ONE documents scan, not read from the
+    # sig_table/tokset_table parquet: the pair table is the build's
+    # only materialization, so a near-dup snapshot no longer writes
+    # two tables it never reads (the delta path still reads them; its
+    # first caller builds them).  Each join side recomputes the signature
+    # kernel and the verify sides share one token-set broadcast; the
+    # sf0.1 build times and the decision tree for this twice-referenced
+    # frame are in ARCHITECTURE.md "Materializing a twice-referenced
+    # frame".
     #
     # The join key is xxhash64(band, key) — a bigint — instead of the
     # ~40-char signature string: less shuffle volume and cheaper
@@ -205,7 +210,10 @@ def _minhash_scored(
     # 10.3 s).  A 2^-64 hash collision can only ADD a false candidate,
     # which the exact-Jaccard verify below then drops — correctness is
     # unaffected by construction.
-    sigs = sig_table(spark, sf_dir, n_hashes, n_bands)
+    from zebra_spark.io import load
+
+    docs = load(spark, sf_dir, "documents")
+    sigs = _minhash_sigs(docs, n_hashes, n_bands)
     keyed = sigs.select("doc_id", F.xxhash64("band", "key").alias("bk"))
     if max_bucket is not None:
         # Giant-bucket guard for extreme scale (SCALING.md "Near-dup
@@ -244,7 +252,7 @@ def _minhash_scored(
     # exploding (pair x shared word) rows into a shuffle (the fixture
     # has ~100 shared words per pair, so that explode would be two
     # orders of magnitude more rows)
-    return _verify_scored(cand, tokset_table(spark, sf_dir))
+    return _verify_scored(cand, batch_toksets(docs))
 
 
 # --- shared near-dup pair table ---------------------------------------------
@@ -266,11 +274,28 @@ _DERIVED: dict[tuple, str] = {}
 # paths whose parquet files THIS module materialized into its own
 # tempdirs (vs externally registered maintained tables, which the
 # registry must never delete) — restore_derived_registry reclaims
-# these eagerly instead of leaving corpus-sized orphans until atexit
+# these eagerly; whatever is still owned at exit is removed then
 _OWNED_PATHS: set[str] = set()
-# RLock: builds nest (pair_table's build reads sig_table/tokset_table),
-# so the building thread re-enters; other threads still serialize
+# schema each _derived_table build was written with, keyed by PATH (a
+# key re-pointed elsewhere never meets a stale schema): reading with it
+# skips the one-task schema-inference job a bare parquet read runs
+_BUILT_SCHEMAS: dict[str, StructType] = {}
+# RLock: builds nest (cluster_label_table's build reads pair_table), so
+# the building thread re-enters; other threads still serialize
 _DERIVED_LOCK = threading.RLock()
+
+
+def _remove_owned(path: str) -> None:
+    _OWNED_PATHS.discard(path)
+    # the owned layout is <tempdir>/data — reclaim the dir
+    shutil.rmtree(str(Path(path).parent), ignore_errors=True)
+
+
+@atexit.register
+def _remove_owned_paths() -> None:
+    # one exit handler for every owned build, not one handler per build
+    for path in list(_OWNED_PATHS):
+        _remove_owned(path)
 
 
 def _derived_table(spark: SparkSession, key: tuple, build) -> DataFrame:
@@ -289,17 +314,20 @@ def _derived_table(spark: SparkSession, key: tuple, build) -> DataFrame:
         with _DERIVED_LOCK:
             path = _DERIVED.get(key)
             if path is None:
-                base = tempfile.mkdtemp(prefix="zebra_derived_")
-                atexit.register(shutil.rmtree, base, ignore_errors=True)
-                path = f"{base}/data"
+                path = f"{tempfile.mkdtemp(prefix='zebra_derived_')}/data"
                 _OWNED_PATHS.add(path)
                 # the build's internal persists (signatures, token sets,
                 # assignment blocks) are scoped to the build: the parquet
                 # write is their terminal action, so they must not linger
                 # until the caller's harness-level release
                 with cache_scope():
-                    build().write.mode("overwrite").parquet(path)
+                    built = build()
+                    built.write.mode("overwrite").parquet(path)
+                _BUILT_SCHEMAS[path] = built.schema
                 _DERIVED[key] = path
+    schema = _BUILT_SCHEMAS.get(path)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
     df = spark.read.parquet(path)
     if "epoch" in df.columns:
         # a register_maintained_table path may be a streaming state
@@ -444,10 +472,9 @@ def restore_derived_registry(snapshot: dict) -> None:
     with _DERIVED_LOCK:
         for key in [k for k in _DERIVED if k not in snapshot]:
             path = _DERIVED.pop(key, None)
+            _BUILT_SCHEMAS.pop(path, None)
             if path in _OWNED_PATHS:
-                _OWNED_PATHS.discard(path)
-                # the owned layout is <tempdir>/data — reclaim the dir
-                shutil.rmtree(str(Path(path).parent), ignore_errors=True)
+                _remove_owned(path)
 
 
 def sig_table(
@@ -457,23 +484,29 @@ def sig_table(
     n_bands: int = N_BANDS,
 ) -> DataFrame:
     """(doc_id, band, key): the banded MinHash signatures, materialized
-    once per (dataset, config) per session.  Both sides of the
-    candidate band-join and the incremental screen read these files; a
-    parquet scan carries stats, so (unlike a localCheckpoint cut) every
-    downstream broadcast decision is preserved."""
+    on first use per (dataset, config) per session.  The pair-table
+    delta (hence the incremental screen), the band-balance histogram
+    and the audit read these files, and the audit's ingest base state
+    builds them for the delta; the full pair-table build computes its
+    signatures inline instead (_minhash_scored)."""
+
+    def build() -> DataFrame:
+        from zebra_spark.io import load
+
+        docs = load(spark, sf_dir, "documents")
+        return _minhash_sigs(docs, n_hashes, n_bands)
+
     key = ("sigs", str(Path(sf_dir).resolve()), n_hashes, n_bands)
-    return _derived_table(
-        spark, key, lambda: _minhash_sigs(spark, sf_dir, n_hashes, n_bands)
-    )
+    return _derived_table(spark, key, build)
 
 
 def tokset_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, words sorted array): per-doc distinct token sets — the
-    verify-stage input shared by the pair-table build and the
-    incremental screen.  Built through the per-row batch_toksets kernel
-    (r10): bit-identical to the earlier explode → collect_set →
-    array_sort chain, but with zero shuffle — the distinct-and-sort
-    happens inside each row."""
+    verify-stage input of the pair-table delta (hence the incremental
+    screen), materialized on first use; the full pair-table build runs
+    the same batch_toksets kernel inline.  Per-row (r10): bit-identical
+    to the earlier explode → collect_set → array_sort chain, but with
+    zero shuffle — the distinct-and-sort happens inside each row."""
 
     def build() -> DataFrame:
         from zebra_spark.io import load
@@ -983,7 +1016,9 @@ def incremental_screen(
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash fingerprint per document (unweighted tokens):
     bit_j = sign of the token-majority of hash-bit j."""
-    t2 = _token_ids(spark, sf_dir)
+    from zebra_spark.io import load
+
+    t2 = _token_ids(load(spark, sf_dir, "documents"))
     params = spark.createDataFrame(
         [(j, 2 * j + 1, 17 * j + 29, 1 << j) for j in range(N_HASHES)],
         "j int, a bigint, b bigint, w bigint",

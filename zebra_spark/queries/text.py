@@ -28,10 +28,15 @@ JACCARD_THRESHOLD = 0.2
 JACCARD_DF_CAP = 64
 
 
+def doc_tokens(docs: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, word): the whitespace tokens of a documents frame, one
+    row per occurrence — the one tokenizer expression the text queries
+    and the near-dup signatures share."""
+    return docs.select(*keys, F.explode(F.split("text", " ")).alias("word"))
+
+
 def tokens(spark: SparkSession, sf_dir: str, distinct: bool = True) -> DataFrame:
-    t = load(spark, sf_dir, "documents").select(
-        "doc_id", "source", F.explode(F.split("text", " ")).alias("word")
-    )
+    t = doc_tokens(load(spark, sf_dir, "documents"), "doc_id", "source")
     return t.distinct() if distinct else t
 
 

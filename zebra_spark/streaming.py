@@ -353,18 +353,20 @@ def build_screen_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-only signature index an ingest pipeline maintains
     (q_dedup_incremental recomputes it from the fixture for oracle
     parity; here it is built once and reused across micro-batches)."""
+    from zebra_spark.io import load
     from zebra_spark.queries.dedup import N_BANDS, N_HASHES, _minhash_sigs
-    from zebra_spark.queries.text import tokens
+    from zebra_spark.queries.text import doc_tokens
 
-    sigs = _minhash_sigs(spark, sf_dir, N_HASHES, N_BANDS).filter(
+    docs = load(spark, sf_dir, "documents")
+    sigs = _minhash_sigs(docs, N_HASHES, N_BANDS).filter(
         F.col("doc_id") % 10 != 0
     )
     keyed = sigs.select(
         F.xxhash64("band", "key").alias("bk"), F.col("doc_id").alias("doc_c")
     )
     toksets = (
-        tokens(spark, sf_dir, distinct=True)
-        .select("doc_id", "word")
+        doc_tokens(docs, "doc_id")
+        .distinct()
         .groupBy("doc_id")
         .agg(F.collect_set("word").alias("words_c"))
         .withColumnRenamed("doc_id", "doc_c")
